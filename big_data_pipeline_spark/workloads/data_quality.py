@@ -219,17 +219,18 @@ def fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # left join against a DISTINCT parent key set never fans out. At
     # corpus scale this turns 3 full child scans into 1 (guide §2.4);
     # the per-edge aggregates and the 7-row output are unchanged.
-    by_child: dict[str, list[tuple[str, str, str]]] = {}
-    for child, fk, parent, pk in _FK_RELATIONS:
-        by_child.setdefault(child, []).append((fk, parent, pk))
+    by_child: dict[str, list[tuple[int, str, str, str]]] = {}
+    for r, (child, fk, parent, pk) in enumerate(_FK_RELATIONS):
+        by_child.setdefault(child, []).append((r, fk, parent, pk))
 
-    # output rows must keep the _FK_RELATIONS order
-    row_frames: dict[tuple[str, str], DataFrame] = {}
+    # keyed by relation index: output rows keep the _FK_RELATIONS order,
+    # and two edges sharing a child FK column stay distinct rows
+    row_frames: dict[int, DataFrame] = {}
     for child, edges in by_child.items():
         joined = read_table(spark, sf_dir, child).select(
-            *[F.col(fk).alias(f"fk_{i}") for i, (fk, _, _) in enumerate(edges)]
+            *[F.col(fk).alias(f"fk_{i}") for i, (_, fk, _, _) in enumerate(edges)]
         )
-        for i, (_, parent, pk) in enumerate(edges):
+        for i, (_, _, parent, pk) in enumerate(edges):
             p = (
                 read_table(spark, sf_dir, parent)
                 .select(F.col(pk).alias(f"pk_{i}"))
@@ -239,7 +240,7 @@ def fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 p, F.col(f"fk_{i}") == F.col(f"pk_{i}"), "left"
             )
         aggs = [F.count(F.lit(1)).alias("n_child_rows")]
-        for i, (fk, parent, pk) in enumerate(edges):
+        for i in range(len(edges)):
             orphan = F.col(f"fk_{i}").isNotNull() & F.col(f"pk_{i}").isNull()
             aggs.extend(
                 [
@@ -258,17 +259,15 @@ def fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ]
             )
         stats = joined.agg(*aggs)
-        for i, (fk, parent, pk) in enumerate(edges):
-            row_frames[(child, fk)] = stats.select(
+        for i, (r, fk, parent, pk) in enumerate(edges):
+            row_frames[r] = stats.select(
                 F.lit(f"{child}.{fk}->{parent}.{pk}").alias("relation"),
                 F.col("n_child_rows"),
                 F.col(f"n_null_fk_{i}").alias("n_null_fk"),
                 F.col(f"n_orphan_rows_{i}").alias("n_orphan_rows"),
                 F.col(f"n_orphan_keys_{i}").alias("n_orphan_keys"),
             )
-    parts = [
-        row_frames[(child, fk)] for child, fk, _, _ in _FK_RELATIONS
-    ]
+    parts = [row_frames[r] for r in range(len(_FK_RELATIONS))]
     return reduce(lambda a, b: a.unionAll(b), parts)
 
 

@@ -21,6 +21,8 @@ independently pins the math.
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -53,40 +55,70 @@ def trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- driver-solved graph loops (r10) -----------------------------------------
-# The BFS/Bellman-Ford/peel loops below iterate a KEY-BOUNDED aggregated
-# graph (|edges| <= |nations|^2 at any corpus size) through cluster jobs
-# — the same scheduling-dominated shape `operators/graph._pagerank_driver`
-# and `dedup/clusters._cc_driver` already solve with one bounded collect
-# + a numpy loop. Each solver below replicates its distributed loop's
-# EXACT synchronous round structure (same round caps, same early-exit
-# conditions), so the emitted row set is identical even when the round
-# budget stops short of convergence. The distributed loops stay in place
-# for corpus-scale graphs (gate: count-first, `0` disables the driver
-# path; equivalence pinned in tests/test_graph_driver.py).
-
-_GRAPH_DRIVER_MAX_EDGES = 2_000_000
+# --- driver-solved trade-graph queries --------------------------------------
+# bfs, sssp, closeness, k-core and LPA iterate over the thresholded trade
+# graph, which has one edge per (supplier nation, customer nation) pair.
+# `nation` is a fixed 25-row dimension (`tools/gen_sf.py` copies its
+# FIXED tables unchanged at every scale), so the graph has at most
+# 25² = 625 edges at any corpus size. Each query therefore runs one
+# Spark pass that builds the edge list, collects it, and iterates in
+# numpy. Each solver runs synchronous rounds under its recursive-CTE
+# oracle's round cap and stops early only at a fixpoint, so the rows
+# agree even when the cap stops short of convergence.
 
 
-def _edges_if_driver_small(und: DataFrame, max_edges: int):
-    """Count-first gate; the count also materializes the frame's lazy
-    checkpoint in-job (round 1's probe paid that job before). Returns
-    a pandas frame of the edges, or None to take the distributed loop."""
-    if not max_edges or und.count() > max_edges:
-        return None
-    return und.toPandas()
+def _strong_edges(spark: SparkSession, sf_dir: str, factor: float):
+    """Collect the strong-trade edges as a pandas frame (a, b, w): each
+    nation pair with a direction whose revenue exceeds ``factor`` x the
+    exact mean edge revenue, in both orientations. ``w`` is the integer
+    edge cost ``floor(revenue / 1e5) + 1``, the minimum over the pair's
+    directions."""
+    # the aggregated edge frame feeds both the exact-avg threshold scalar
+    # and the probe side of the threshold filter; the lazy cut runs the
+    # 5-way corpus join + groupBy once (without it the executed plan
+    # scans lineitem 4 times, with no exchange reused)
+    edges = trade_edges(spark, sf_dir).localCheckpoint(eager=False)
+    avg_rev = edges.agg(exact_avg("revenue", "avg_rev"))
+    strong = (
+        edges.crossJoin(F.broadcast(avg_rev))
+        .filter(F.col("revenue") > factor * F.col("avg_rev"))
+        .filter(F.col("src") != F.col("dst"))
+        .select(
+            F.least("src", "dst").alias("a"),
+            F.greatest("src", "dst").alias("b"),
+            (F.floor(F.col("revenue") / F.lit(100000.0)) + 1)
+            .cast("long")
+            .alias("w"),
+        )
+    )
+    return (
+        strong.unionByName(
+            strong.select(F.col("b").alias("a"), F.col("a").alias("b"), "w")
+        )
+        .groupBy("a", "b")
+        .agg(F.min("w").alias("w"))
+        .toPandas()
+    )
 
 
-def _bfs_hops_driver(pdf, source, max_hops: int) -> list[tuple]:
-    """Frontier BFS over a symmetric (a, b) edge array — one numpy
-    scatter per hop level; identical (node, hop) rows to the
-    distributed frontier loop (hop = first-reach level, <= max_hops)."""
+def _node_index(pdf):
+    """Dense node positions for an edge frame's first two columns:
+    returns (ids, u, v) with ids sorted and u, v indexing into it."""
     import numpy as np
 
     a = pdf.iloc[:, 0].to_numpy()
     b = pdf.iloc[:, 1].to_numpy()
     ids, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
-    u, v = inv[: len(a)], inv[len(a):]
+    return ids, inv[: len(a)], inv[len(a):]
+
+
+def _bfs_hops_driver(pdf, source, max_hops: int) -> list[tuple]:
+    """Frontier BFS over a symmetric (a, b) edge array — one numpy
+    scatter per hop level; returns (node, hop) rows, hop = first-reach
+    level <= max_hops."""
+    import numpy as np
+
+    ids, u, v = _node_index(pdf)
     n = len(ids)
     src_pos = int(np.searchsorted(ids, source))
     if src_pos >= n or ids[src_pos] != source:
@@ -108,16 +140,13 @@ def _bfs_hops_driver(pdf, source, max_hops: int) -> list[tuple]:
 
 
 def _sssp_driver(pdf, source, max_rounds: int) -> list[tuple]:
-    """Synchronous Bellman-Ford rounds over (a, b, w) edges with the
-    SAME bounded-round + no-improvement early exit as the distributed
-    loop (integer costs, so ties and partial convergence agree)."""
+    """Synchronous Bellman-Ford rounds over (a, b, w) edges, at most
+    max_rounds, stopping early when no distance improves (integer
+    costs, so ties and partial convergence are exact)."""
     import numpy as np
 
-    a = pdf.iloc[:, 0].to_numpy()
-    b = pdf.iloc[:, 1].to_numpy()
+    ids, u, v = _node_index(pdf)
     w = pdf.iloc[:, 2].to_numpy().astype(np.int64)
-    ids, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
-    u, v = inv[: len(a)], inv[len(a):]
     n = len(ids)
     src_pos = int(np.searchsorted(ids, source))
     if src_pos >= n or ids[src_pos] != source:
@@ -138,13 +167,12 @@ def _sssp_driver(pdf, source, max_rounds: int) -> list[tuple]:
 
 def _kcore_driver(pdf, k: int, rounds: int) -> list[tuple]:
     """Degree-peel rounds over the symmetric directed (u, v) edge
-    array; same round cap and fixpoint break as kcore_peel's loop."""
+    array: an edge survives a round iff both endpoint degrees are >= k;
+    at most ``rounds`` rounds, stopping at the fixpoint. Returns the
+    surviving (u, v) rows."""
     import numpy as np
 
-    a = pdf.iloc[:, 0].to_numpy()
-    b = pdf.iloc[:, 1].to_numpy()
-    ids, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
-    u, v = inv[: len(a)], inv[len(a):]
+    ids, u, v = _node_index(pdf)
     n = len(ids)
     alive = np.ones(len(u), dtype=bool)
     n_edges = len(u)
@@ -161,25 +189,16 @@ def _kcore_driver(pdf, k: int, rounds: int) -> list[tuple]:
     return list(zip(ids[u[alive]].tolist(), ids[v[alive]].tolist()))
 
 
-# dense all-sources BFS: n^2 bools + an n^2 matmul per hop; nation-like
-# aggregated graphs are tiny, corpus-node-scale graphs take the
-# distributed keyed frontier
-_CLOSENESS_DRIVER_MAX_NODES = 2_048
-
-
 def _lpa_driver(pdf, iters: int, enc: int) -> list[tuple]:
     """Deterministic min-encoded label propagation over the symmetric
     directed (src, dst) edge array — the EXACT integer update of the
-    distributed loop: per round every node takes, over its incoming
-    labels, min((enc - count) * enc + label) % enc (most-frequent label,
+    oracle: per round every node takes, over its incoming labels,
+    min((enc - count) * enc + label) % enc (most-frequent label,
     smallest on ties). Labels are always < enc, so (dst, label) pairs
     pack injectively into one int64 key for the count pass."""
     import numpy as np
 
-    a = pdf.iloc[:, 0].to_numpy()
-    b = pdf.iloc[:, 1].to_numpy()
-    ids, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
-    u, v = inv[: len(a)], inv[len(a):]
+    ids, u, v = _node_index(pdf)
     n = len(ids)
     lab = ids.astype(np.int64).copy()  # initial label = node id
     sentinel = np.iinfo(np.int64).max
@@ -193,20 +212,14 @@ def _lpa_driver(pdf, iters: int, enc: int) -> list[tuple]:
     return list(zip(ids.tolist(), [int(x) for x in lab.tolist()]))
 
 
-def _closeness_driver(pdf, max_hops: int) -> list[tuple] | None:
+def _closeness_driver(pdf, max_hops: int) -> list[tuple]:
     """All-sources frontier BFS: every source advances one hop per
-    round exactly like the keyed distributed frontier — returns the
-    (source, node, hop) first-reach rows, or None when the node count
-    exceeds the dense-matrix bound."""
+    round (one dense n x n matmul) — returns the (source, node, hop)
+    first-reach rows, hop <= max_hops."""
     import numpy as np
 
-    a = pdf.iloc[:, 0].to_numpy()
-    b = pdf.iloc[:, 1].to_numpy()
-    ids, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
-    u, v = inv[: len(a)], inv[len(a):]
+    ids, u, v = _node_index(pdf)
     n = len(ids)
-    if n > _CLOSENESS_DRIVER_MAX_NODES:
-        return None
     adj = np.zeros((n, n), dtype=np.float32)
     adj[u, v] = 1.0
     hop = np.full((n, n), -1, dtype=np.int64)  # [source, node]
@@ -334,90 +347,30 @@ ORDER BY n_triangles DESC, nation
 # the standard prefilter before community detection and the "dense
 # cluster of near-dup sources" probe on a dedup similarity graph.
 #
-# Distributed design: the state is the SYMMETRIC directed edge list
-# (each undirected edge as (u,v) and (v,u)), so one per-key count gives
-# every node's degree and an edge survives iff both endpoint degrees
-# >= k — one groupBy + two joins per round, lineage cut per round
-# (localCheckpoint, same as star-CC), rounds bounded by the peel depth
-# (<= |nodes|, in practice a handful). No driver-side graph state.
+# Driver solve (`_kcore_driver`): the state is the SYMMETRIC directed
+# edge list (each undirected edge as (u,v) and (v,u)), so one per-node
+# count gives every degree and an edge survives a round iff both
+# endpoint degrees are >= k; rounds stop at the fixpoint.
 #
 # Oracle: genuinely SQL-expressible — a recursive CTE over the directed
 # edge state where window COUNTs over (u) and (v) are both endpoint
 # degrees (the symmetric trick avoids the single-recursive-reference
 # restriction), unrolled a fixed _KCORE_ROUNDS >= |nations| rounds so
-# the final iteration IS the fixpoint. The driver hash-checks the
-# Spark loop against DuckDB's recursion — an independent-implementation
+# the final iteration IS the fixpoint. `tools/check_oracle.py` checks
+# the numpy peel against DuckDB's recursion — an independent-implementation
 # check of the whole iteration, not just one round.
 
 _KCORE_K = 3
 _KCORE_ROUNDS = 30  # >= max peel depth for a <=25-node nation graph
 
 
-def kcore_peel(
-    und: DataFrame,
-    k: int,
-    rounds: int = _KCORE_ROUNDS,
-    driver_max_edges: int | None = None,
-) -> DataFrame:
-    """Peel an undirected (a, b) edge list to its k-core; returns the
-    surviving symmetric edges (u, v). Exposed for direct testing on
-    crafted graphs."""
-    # lazy lineage cuts: each round's count is a full action, so it
-    # materializes that round's checkpoint in the same job — one job per
-    # peel round instead of an eager-checkpoint job plus a count job
-    sym = (
-        und.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .unionAll(und.select(F.col("b").alias("u"), F.col("a").alias("v")))
-        .localCheckpoint(eager=False)
-    )
-    n_edges = sym.count()
-    if driver_max_edges is None:
-        driver_max_edges = _GRAPH_DRIVER_MAX_EDGES
-    if driver_max_edges and n_edges <= driver_max_edges:
-        rows = _kcore_driver(sym.toPandas(), k, rounds)
-        return und.sparkSession.createDataFrame(rows, sym.schema)
-    for _ in range(rounds):
-        if n_edges == 0:
-            break
-        deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-        du = deg.select(F.col("u"), F.col("deg").alias("du"))
-        dv = deg.select(F.col("u").alias("v"), F.col("deg").alias("dv"))
-        nxt = (
-            sym.join(F.broadcast(du), "u")
-            .join(F.broadcast(dv), "v")
-            .filter((F.col("du") >= k) & (F.col("dv") >= k))
-            .select("u", "v")
-            .localCheckpoint(eager=False)
-        )
-        n_next = nxt.count()
-        sym = nxt
-        if n_next == n_edges:  # fixpoint
-            break
-        n_edges = n_next
-    return sym
-
-
 def kcore_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the aggregated edge frame is key-bounded (<= |nations|^2 rows) and
-    # feeds BOTH the exact-avg threshold scalar and the probe side of the
-    # threshold filter — without the cut the 5-way corpus join + groupBy
-    # is planned once per consumer (4 lineitem scans in the und build
-    # plan; runtime exchange reuse rescued most but not all of it, r10)
-    edges = trade_edges(spark, sf_dir).localCheckpoint(eager=False)
-    avg_rev = edges.agg(exact_avg("revenue", "avg_rev"))
-    und = (
-        edges.crossJoin(F.broadcast(avg_rev))
-        .filter(F.col("revenue") > F.col("avg_rev"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
+    pdf = _strong_edges(spark, sf_dir, 1.0)
+    sym = spark.createDataFrame(
+        _kcore_driver(pdf, _KCORE_K, _KCORE_ROUNDS), "nation string, v string"
     )
-    sym = kcore_peel(und, _KCORE_K)
     return (
-        sym.groupBy(F.col("u").alias("nation"))
+        sym.groupBy("nation")
         .agg(F.count(F.lit(1)).alias("kcore_degree"))
         .orderBy(F.desc("kcore_degree"), "nation")
     )
@@ -536,15 +489,7 @@ ORDER BY rank DESC, nation
 # (64 - cnt) * 64 + label is strictly decreasing in cnt and increasing
 # in label, so MIN picks (max count, then min label); % 64 decodes the
 # label. That keeps the recursive arm window-free (two stacked GROUP
-# BYs), and on the Spark side makes each round ONE keyed aggregation —
-# map-side combinable, no row_number shuffle-and-filter.
-#
-# Scale: per-round cost is |edges| message rows into a groupBy on
-# (node, label) — the standard Pregel round as one shuffle. The
-# nation graph is key-bounded (≤ 25² edges after per-pair aggregation
-# regardless of input size); for web-scale graphs the same loop runs
-# with the label frame localCheckpoint'ed per round (lineage cut, as
-# in the star-CC operator) — exactly what this implementation does.
+# BYs); `_lpa_driver` replays the same integer update in numpy.
 
 _LPA_ITERS = 4
 _LPA_THRESHOLD = 2.2  # x mean edge revenue (sparser than triangle's 1.8)
@@ -552,79 +497,21 @@ _LPA_ENC = 64  # > max(label) and > max(count): safe min-encoding radix
 
 
 def lpa_trade_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lineitem = read_table(spark, sf_dir, "lineitem")
-    orders = read_table(spark, sf_dir, "orders")
-    supplier = read_table(spark, sf_dir, "supplier")
-    customer = read_table(spark, sf_dir, "customer")
-    nation = read_table(spark, sf_dir, "nation")
-    edges = (
-        lineitem.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(supplier), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(customer), F.col("o_custkey") == F.col("c_custkey"))
-        .groupBy(
-            F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst")
-        )
-        .agg(exact_sum("l_extendedprice * (1 - l_discount)", "revenue"))
-        # key-bounded frame consumed by the avg scalar AND the threshold
-        # probe below — one corpus pass instead of a replay per consumer
-        .localCheckpoint(eager=False)
+    pdf = _strong_edges(spark, sf_dir, _LPA_THRESHOLD)
+    # labels (and the oracle's `community`) are nation keys. The oracle
+    # groups edges by key and the helper by name; they agree because
+    # n_name is 1:1 with n_nationkey and every s_/c_nationkey has a
+    # parent (fk_integrity_audit's nation edges)
+    nation = read_table(spark, sf_dir, "nation").toPandas()
+    key = dict(zip(nation["n_name"], nation["n_nationkey"]))
+    name = {k: n for n, k in key.items()}
+    labels = _lpa_driver(
+        pdf[["a", "b"]].apply(lambda col: col.map(key)), _LPA_ITERS, _LPA_ENC
     )
-    avg_rev = edges.agg(exact_avg("revenue", "avg_rev"))
-    und = (
-        edges.crossJoin(F.broadcast(avg_rev))
-        .filter(F.col("revenue") > _LPA_THRESHOLD * F.col("avg_rev"))
-        .filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("x"), F.greatest("src", "dst").alias("y")
-        )
-        .distinct()
-    )
-    sym = (
-        und.select(F.col("x").alias("src"), F.col("y").alias("dst"))
-        .unionAll(und.select(F.col("y").alias("src"), F.col("x").alias("dst")))
-        # consumed every round: cut the 4-join lineage. Lazy — the gate
-        # count below materializes it in the same job (r9 convention)
-        .localCheckpoint(eager=False)
-    )
-    pdf = _edges_if_driver_small(sym, _GRAPH_DRIVER_MAX_EDGES)
-    if pdf is not None:
-        from pyspark.sql import types as T
-
-        labels = spark.createDataFrame(
-            _lpa_driver(pdf, _LPA_ITERS, _LPA_ENC),
-            T.StructType(
-                [
-                    T.StructField("id", sym.schema["src"].dataType),
-                    T.StructField("label", T.IntegerType()),
-                ]
-            ),
-        )
-    else:
-        labels = sym.select(F.col("src").alias("id")).distinct().withColumn(
-            "label", F.col("id")
-        )
-        enc = F.lit(_LPA_ENC)
-        for _ in range(_LPA_ITERS):
-            labels = (
-                sym.join(labels, sym.src == labels.id)
-                .groupBy(F.col("dst").alias("nid"), "label")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-                .groupBy(F.col("nid").alias("id"))
-                .agg(
-                    (F.min((enc - F.col("cnt")) * enc + F.col("label")) % enc)
-                    .cast("int")
-                    .alias("label")
-                )
-                .localCheckpoint(eager=True)
-            )
-    sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("community_size"))
-    names = nation.select(
-        F.col("n_nationkey").alias("id"), F.col("n_name").alias("nation")
-    )
-    return (
-        labels.join(F.broadcast(sizes), "label")
-        .join(F.broadcast(names), "id")
-        .select("nation", F.col("label").alias("community"), "community_size")
+    size = Counter(lab for _, lab in labels)
+    return spark.createDataFrame(
+        [(name[i], lab, size[lab]) for i, lab in labels],
+        "nation string, community int, community_size bigint",
     )
 
 
@@ -675,17 +562,12 @@ FROM final f JOIN sizes s USING (label) JOIN nation n ON n.n_nationkey = f.id
 # --- bfs_trade_hops: shortest hop distance (frontier BFS) --------------------
 # The remaining classic graph primitive: single-source shortest paths
 # in hops over the thresholded strong-trade graph (same exact-decimal
-# threshold discipline as the triangle query). Distributed frontier
-# BFS: each round joins the CURRENT frontier (shrinking) against the
-# edge list, anti-joins the visited set, and cuts lineage — O(diameter)
-# rounds, never a full-graph recomputation per round. The DuckDB
-# oracle walks the same graph with a recursive CTE and takes MIN(hop)
-# per node — a different traversal that must agree cell-exact.
-#
-# Scale: the frontier join keys on the node id (keyed shuffle against
-# the materialized, key-cardinality-bounded edge list); visited/
-# frontier are node-sized. Unreachable nodes are simply absent —
-# semantics every BFS consumer expects.
+# threshold discipline as the triangle query). `_bfs_hops_driver`
+# advances one frontier per hop level, hop = first-reach level. The
+# DuckDB oracle walks the same graph with a recursive CTE and takes
+# MIN(hop) per node — a different traversal that must agree cell-exact.
+# Unreachable nodes are simply absent — semantics every BFS consumer
+# expects.
 
 _BFS_SOURCE = "NATION_0"
 _BFS_FACTOR = 2.3
@@ -693,58 +575,11 @@ _BFS_MAX_HOPS = 6
 
 
 def bfs_trade_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the aggregated edge frame is key-bounded (<= |nations|^2 rows) and
-    # feeds BOTH the exact-avg threshold scalar and the probe side of the
-    # threshold filter — without the cut the 5-way corpus join + groupBy
-    # is planned once per consumer (4 lineitem scans in the und build
-    # plan; runtime exchange reuse rescued most but not all of it, r10)
-    edges = trade_edges(spark, sf_dir).localCheckpoint(eager=False)
-    avg_rev = edges.agg(exact_avg("revenue", "avg_rev"))
-    strong = (
-        edges.crossJoin(F.broadcast(avg_rev))
-        .filter(F.col("revenue") > _BFS_FACTOR * F.col("avg_rev"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
+    pdf = _strong_edges(spark, sf_dir, _BFS_FACTOR)
+    return spark.createDataFrame(
+        _bfs_hops_driver(pdf, _BFS_SOURCE, _BFS_MAX_HOPS),
+        "nation string, hop int",
     )
-    # lazy lineage cuts: each round's frontier count is a full action and
-    # materializes und (round 1), the new frontier, and the previous
-    # visited union in ONE job — the eager form paid three jobs per round
-    und = (
-        strong.unionByName(
-            strong.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    pdf = _edges_if_driver_small(und, _GRAPH_DRIVER_MAX_EDGES)
-    if pdf is not None:
-        return spark.createDataFrame(
-            _bfs_hops_driver(pdf, _BFS_SOURCE, _BFS_MAX_HOPS),
-            "nation string, hop int",
-        )
-    # a 1-row local relation: no lineage to cut, checkpoint buys nothing
-    frontier = spark.createDataFrame(
-        [(_BFS_SOURCE, 0)], "nation string, hop int"
-    )
-    visited = frontier
-    for hop in range(1, _BFS_MAX_HOPS + 1):
-        nxt = (
-            frontier.join(und, frontier["nation"] == und["a"])
-            .select(F.col("b").alias("nation"))
-            .distinct()
-            .join(visited.select("nation"), "nation", "left_anti")
-            .withColumn("hop", F.lit(hop))
-            .localCheckpoint(eager=False)
-        )
-        if nxt.count() == 0:
-            break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=False)
-        frontier = nxt
-    return visited
 
 
 _BFS_SQL = f"""
@@ -784,88 +619,20 @@ FROM walk GROUP BY n
 # the source over the SAME strong-trade graph, with integer edge costs
 # (floor(revenue/1e5)+1 — heavier trade = cheaper hop is deliberately
 # NOT used; cost grows with bucketed revenue so paths differ from hop
-# counts). Distributed Bellman-Ford: each round joins current
-# distances against the edge list, takes the min per node, and cuts
-# lineage — |V|-1 rounds bound exact convergence; the fixed round
-# budget matches the BFS diameter bound. Integer arithmetic end to
-# end, so the DuckDB oracle (bounded-depth recursive walk + MIN) is
-# cell-exact.
+# counts). `_sssp_driver` runs synchronous Bellman-Ford rounds — |V|-1
+# rounds bound exact convergence; the fixed round budget matches the
+# BFS diameter bound. Integer arithmetic end to end, so the DuckDB
+# oracle (bounded-depth recursive walk + MIN) is cell-exact.
 
 _SSSP_MAX_ROUNDS = 6
 
 
 def sssp_trade_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the aggregated edge frame is key-bounded (<= |nations|^2 rows) and
-    # feeds BOTH the exact-avg threshold scalar and the probe side of the
-    # threshold filter — without the cut the 5-way corpus join + groupBy
-    # is planned once per consumer (4 lineitem scans in the und build
-    # plan; runtime exchange reuse rescued most but not all of it, r10)
-    edges = trade_edges(spark, sf_dir).localCheckpoint(eager=False)
-    avg_rev = edges.agg(exact_avg("revenue", "avg_rev"))
-    strong = (
-        edges.crossJoin(F.broadcast(avg_rev))
-        .filter(F.col("revenue") > _BFS_FACTOR * F.col("avg_rev"))
-        .filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-            (F.floor(F.col("revenue") / F.lit(100000.0)) + 1)
-            .cast("long")
-            .alias("w"),
-        )
-        .groupBy("a", "b")
-        .agg(F.min("w").alias("w"))
+    pdf = _strong_edges(spark, sf_dir, _BFS_FACTOR)
+    return spark.createDataFrame(
+        _sssp_driver(pdf, _BFS_SOURCE, _SSSP_MAX_ROUNDS),
+        "nation string, cost long",
     )
-    und = (
-        strong.unionByName(
-            strong.select(
-                F.col("b").alias("a"), F.col("a").alias("b"), "w"
-            )
-        )
-        .groupBy("a", "b")
-        .agg(F.min("w").alias("w"))
-        # lazy lineage cuts: round 1's improvement count materializes
-        # und and relaxed in one job (eager form: one checkpoint job +
-        # one probe job per round)
-        .localCheckpoint(eager=False)
-    )
-    pdf = _edges_if_driver_small(und, _GRAPH_DRIVER_MAX_EDGES)
-    if pdf is not None:
-        return spark.createDataFrame(
-            _sssp_driver(pdf, _BFS_SOURCE, _SSSP_MAX_ROUNDS),
-            "nation string, cost long",
-        )
-    # a 1-row local relation: no lineage to cut, checkpoint buys nothing
-    dist = spark.createDataFrame(
-        [(_BFS_SOURCE, 0)], "nation string, cost long"
-    )
-    for _ in range(_SSSP_MAX_ROUNDS):
-        relaxed = (
-            dist.join(und, dist["nation"] == und["a"])
-            .select(
-                F.col("b").alias("nation"),
-                (F.col("cost") + F.col("w")).alias("cost"),
-            )
-            .unionByName(dist)
-            .groupBy("nation")
-            .agg(F.min("cost").alias("cost"))
-            .localCheckpoint(eager=False)
-        )
-        # converged when no distance improved this round (full-action
-        # count, so it also materializes relaxed's checkpoint in-job)
-        n_improved = (
-            relaxed.join(
-                dist.withColumnRenamed("cost", "old"), "nation", "left"
-            )
-            .filter(
-                F.col("old").isNull() | (F.col("cost") < F.col("old"))
-            )
-            .count()
-        )
-        dist = relaxed
-        if n_improved == 0:
-            break
-    return dist
 
 
 _SSSP_SQL = f"""
@@ -911,76 +678,18 @@ FROM walk GROUP BY n
 # --- closeness_trade_centrality: multi-source BFS centrality -----------------
 # The centrality family member PageRank can't substitute for:
 # closeness = (reachable-1) / Σ hop-distance, computed for EVERY node
-# at once. Same frontier machinery as bfs_trade_hops with the source
-# id carried in the key — ALL single-source searches advance in the
-# same round's keyed join ((src, node) frontier vs the edge list), so
-# all-pairs distances cost diameter rounds, not |V| sequential runs.
-# Distance sums are exact integers; one double division per node.
+# at once. `_closeness_driver` advances ALL single-source frontiers in
+# the same round (one dense matmul per hop), so all-pairs distances
+# cost diameter rounds, not |V| sequential runs. Distance sums are
+# exact integers; one double division per node.
 
 
 def closeness_trade_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the aggregated edge frame is key-bounded (<= |nations|^2 rows) and
-    # feeds BOTH the exact-avg threshold scalar and the probe side of the
-    # threshold filter — without the cut the 5-way corpus join + groupBy
-    # is planned once per consumer (4 lineitem scans in the und build
-    # plan; runtime exchange reuse rescued most but not all of it, r10)
-    edges = trade_edges(spark, sf_dir).localCheckpoint(eager=False)
-    avg_rev = edges.agg(exact_avg("revenue", "avg_rev"))
-    strong = (
-        edges.crossJoin(F.broadcast(avg_rev))
-        .filter(F.col("revenue") > _BFS_FACTOR * F.col("avg_rev"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
+    pdf = _strong_edges(spark, sf_dir, _BFS_FACTOR)
+    visited = spark.createDataFrame(
+        _closeness_driver(pdf, _BFS_MAX_HOPS),
+        "source string, nation string, hop int",
     )
-    # lazy lineage cuts (same device as bfs_trade_hops): the per-round
-    # frontier count materializes everything this round needs in one job
-    und = (
-        strong.unionByName(
-            strong.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    rows = None
-    pdf = _edges_if_driver_small(und, _GRAPH_DRIVER_MAX_EDGES)
-    if pdf is not None:
-        # may still decline (node count above the dense-matrix bound)
-        rows = _closeness_driver(pdf, _BFS_MAX_HOPS)
-    if rows is not None:
-        visited = spark.createDataFrame(
-            rows, "source string, nation string, hop int"
-        )
-        return _closeness_agg(visited)
-    nodes = und.select(F.col("a").alias("nation")).distinct()
-    frontier = nodes.select(
-        F.col("nation").alias("source"), "nation", F.lit(0).alias("hop")
-    ).localCheckpoint(eager=False)
-    visited = frontier
-    for hop in range(1, _BFS_MAX_HOPS + 1):
-        nxt = (
-            frontier.join(und, frontier["nation"] == und["a"])
-            .select("source", F.col("b").alias("nation"))
-            .distinct()
-            .join(
-                visited.select("source", "nation"),
-                ["source", "nation"],
-                "left_anti",
-            )
-            .withColumn("hop", F.lit(hop))
-            .localCheckpoint(eager=False)
-        )
-        if nxt.count() == 0:
-            break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=False)
-        frontier = nxt
-    return _closeness_agg(visited)
-
-
-def _closeness_agg(visited: DataFrame) -> DataFrame:
     return visited.groupBy(F.col("source").alias("nation")).agg(
         (F.count(F.lit(1)) - 1).cast("bigint").alias("n_reachable"),
         F.sum("hop").cast("bigint").alias("total_dist"),

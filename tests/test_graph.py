@@ -83,32 +83,41 @@ def test_driver_and_distributed_paths_agree(spark):
     assert abs(sum(fast.values()) - 1.0) < 1e-9
 
 
-def test_kcore_peel_clique_survives_tail_removed(spark):
+def _sym(edges):
+    import pandas as pd
+
+    return pd.DataFrame(edges + [(b, a) for a, b in edges], columns=["u", "v"])
+
+
+def test_kcore_peel_clique_survives_tail_removed():
     """4-clique + pendant path: the 3-core is exactly the clique (each
     clique node keeps degree 3); the path peels away over multiple
     rounds (the iterative part actually iterates)."""
-    from big_data_pipeline_spark.workloads.graph_rank import kcore_peel
+    from big_data_pipeline_spark.workloads.graph_rank import (
+        _KCORE_ROUNDS,
+        _kcore_driver,
+    )
 
     clique = [("a", "b"), ("a", "c"), ("a", "d"), ("b", "c"), ("b", "d"), ("c", "d")]
     tail = [("d", "e"), ("e", "f"), ("f", "g")]
-    und = spark.createDataFrame(clique + tail, "a string, b string")
-    core = kcore_peel(und, 3).collect()
-    nodes = {r.u for r in core}
+    core = _kcore_driver(_sym(clique + tail), 3, _KCORE_ROUNDS)
+    nodes = {u for u, _ in core}
     assert nodes == {"a", "b", "c", "d"}
     deg = {}
-    for r in core:
-        deg[r.u] = deg.get(r.u, 0) + 1
+    for u, _ in core:
+        deg[u] = deg.get(u, 0) + 1
     assert all(d == 3 for d in deg.values())
 
 
-def test_kcore_peel_empty_when_k_too_high(spark):
-    from big_data_pipeline_spark.workloads.graph_rank import kcore_peel
-
-    und = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "a")], "a string, b string"
+def test_kcore_peel_empty_when_k_too_high():
+    from big_data_pipeline_spark.workloads.graph_rank import (
+        _KCORE_ROUNDS,
+        _kcore_driver,
     )
-    assert kcore_peel(und, 3).count() == 0  # triangle has max degree 2
-    assert kcore_peel(und, 2).count() == 6  # symmetric triangle edges
+
+    tri = _sym([("a", "b"), ("b", "c"), ("c", "a")])
+    assert len(_kcore_driver(tri, 3, _KCORE_ROUNDS)) == 0  # max degree 2
+    assert len(_kcore_driver(tri, 2, _KCORE_ROUNDS)) == 6  # symmetric triangle
 
 
 def test_bfs_hops_are_consistent(spark, sf_dir):

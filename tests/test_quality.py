@@ -122,6 +122,29 @@ def test_fk_integrity_audit_counts_planted_orphans(spark, tmp_path):
             assert r.n_orphan_rows == 0
 
 
+def test_fk_integrity_audit_edges_sharing_child_fk(spark, sf_dir, monkeypatch):
+    """Two edges on the same child FK column with different parents
+    each get their own row, in relation order."""
+    from big_data_pipeline_spark.workloads import data_quality as dq
+
+    monkeypatch.setattr(
+        dq,
+        "_FK_RELATIONS",
+        (
+            ("nation", "n_regionkey", "region", "r_regionkey"),
+            ("nation", "n_regionkey", "nation", "n_nationkey"),
+        ),
+    )
+    rows = dq.fk_integrity_audit(spark, sf_dir).collect()
+    assert [r.relation for r in rows] == [
+        "nation.n_regionkey->region.r_regionkey",
+        "nation.n_regionkey->nation.n_nationkey",
+    ]
+    # every region key is also a nation key (0..4 < 25)
+    assert [r.n_orphan_rows for r in rows] == [0, 0]
+    assert rows[0].n_child_rows == rows[1].n_child_rows == 25
+
+
 def test_measure_corr_matrix_matches_numpy(spark, sf_dir):
     import numpy as np
 

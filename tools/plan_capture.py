@@ -1,8 +1,9 @@
-"""Capture .explain("formatted") for named queries into plans/r09/.
+"""Capture .explain("formatted") for named queries into plans/ROUND/.
 
-Usage: python tools/plan_r09.py before q1,q2,...   (or 'after')
-Writes plans/r09/<query>_<tag>.txt — the judge checks plan claims in
-OPTIMIZATION_r09.md against these files.
+Usage: python tools/plan_capture.py ROUND TAG q1,q2,...
+       e.g. python tools/plan_capture.py r10 before q1_pricing_summary
+Writes plans/ROUND/<query>_<TAG>.txt — the evidence for the plan claims
+in OPTIMIZATION_<ROUND>.md.
 """
 
 from __future__ import annotations
@@ -21,13 +22,13 @@ from big_data_pipeline_spark.session import get_spark  # noqa: E402
 
 
 def main() -> int:
-    tag = sys.argv[1]
-    names = [s.strip() for s in sys.argv[2].split(",") if s.strip()]
+    rnd, tag = sys.argv[1], sys.argv[2]
+    names = [s.strip() for s in sys.argv[3].split(",") if s.strip()]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("plan_r09", master="local[4]")
+    spark = get_spark("plan_capture", master="local[4]")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
-    out_dir = REPO / "plans" / "r09"
+    out_dir = REPO / "plans" / rnd
     out_dir.mkdir(parents=True, exist_ok=True)
     for name in names:
         df = qs[name](spark, sf_dir)

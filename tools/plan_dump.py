@@ -64,7 +64,7 @@ HEADLINE = [
     ("span_corruption_plan", "hash-thresholded starts, constant-factor explode"),
     ("sgns_training_pairs", "shift-zip positives + broadcast vocab negatives"),
     ("cf_hitrate_eval", "temporal split, WindowGroupLimit top-K, broadcast join"),
-    ("bfs_trade_hops", "frontier BFS serving plan (lineage-cut rounds)"),
+    ("bfs_trade_hops", "driver-solved BFS: collected edges + numpy frontier"),
     ("span_first_occurrence_dedup", "packed-key min combine + keep-first join"),
     ("multimodal_png_pixel_stats", "one Arrow pass: encode/decode, no shuffle"),
     ("mann_kendall_trend", "per-user bounded pair join + exact tie terms"),
