@@ -91,7 +91,9 @@ def ingest(spark: SparkSession, cfg: PipelineConfig) -> None:
         pdf = synthetic_bars(symbol, cfg.periods, cfg.seed)
         if pdf.empty:  # S3 empty-input guard (stock_ingestor.py:25-27)
             continue
-        df = spark.createDataFrame(pdf)
+        # One fetch is one driver-side frame: write it as one file, not
+        # one per defaultParallelism slice that every later layer inherits.
+        df = spark.createDataFrame(pdf).coalesce(1)
         write_json(df, os.path.join(cfg.layer("raw"), f"symbol={symbol}"))
 
 

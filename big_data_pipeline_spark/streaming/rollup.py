@@ -86,9 +86,11 @@ def rollup_drain(
     """Drain new event files into the hourly rollup; return micro-batch
     count (0 = nothing new).
 
-    ``state_partitions`` is fixed by the FIRST drain's checkpoint (see
-    windows.run_available_now); size it to the cluster before first
-    start.
+    ``state_partitions`` is fixed by the FIRST drain's checkpoint: this
+    checkpoint persists across drains, so the count is a caller choice
+    made once, sized to the cluster (~2-3× executor cores) before first
+    start. (``windows.run_available_now`` can derive its count from the
+    host because its checkpoint lives for one drain only.)
     """
     agg = (
         _events_stream(spark, events_dir)

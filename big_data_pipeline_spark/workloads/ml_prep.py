@@ -74,6 +74,14 @@ def nb_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # derive every model frame from it; per-doc scores become
     # sum(lp * cnt), an exact integer identity with the occurrence-level
     # sum (guide §2.3/§2.4).
+    # Scale caveat: unlike the model-sized frames checkpointed elsewhere,
+    # dtok is corpus-sized (documents x distinct tokens per doc), and
+    # localCheckpoint blocks cannot be recomputed — a lost executor
+    # fails the query, and the blocks compete with join execution
+    # memory (the r10 basket-family checkpoint reproduced
+    # UNABLE_TO_ACQUIRE_MEMORY at sf10 and was reverted). This one was
+    # validated isolated at sf10 (133.4 s → 70.3 s) and kept; re-check
+    # it before a larger tier, or persist DISK_ONLY there.
     dtok = (
         tok.groupBy("doc_id", "lang", "token")
         .agg(F.count(F.lit(1)).alias("cnt"))

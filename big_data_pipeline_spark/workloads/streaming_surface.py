@@ -229,7 +229,11 @@ def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = dedup_within_watermark(events, watermark="1 hour").select(
         "event_id", "user_id", "event_type", "value"
     )
-    return run_available_now(out, "mem_stream_dedup", output_mode="append")
+    # Append-mode dedup emits each first occurrence in its data batch;
+    # the trailing no-data batch would only evict watermark state.
+    return run_available_now(
+        out, "mem_stream_dedup", output_mode="append", final_watermark_batch=False
+    )
 
 
 _STREAM_DEDUP_SQL = """
@@ -305,7 +309,12 @@ def stream_click_purchase_attribution(spark: SparkSession, sf_dir: str) -> DataF
         "c_event_id",
         (F.unix_micros("p_ts") - F.unix_micros("c_ts")).alias("lag_us"),
     )
-    return run_available_now(joined, "mem_stream_attrib", output_mode="append")
+    # Inner join: every match is emitted in the batch that brings both
+    # rows; the trailing no-data batch would only evict buffered state.
+    return run_available_now(
+        joined, "mem_stream_attrib", output_mode="append",
+        final_watermark_batch=False,
+    )
 
 
 _STREAM_ATTRIB_SQL = """

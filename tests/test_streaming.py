@@ -4,7 +4,12 @@ the check)."""
 
 from __future__ import annotations
 
+import json
+import threading
+import time
+
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
 from big_data_pipeline_spark.io import read_table
 from big_data_pipeline_spark.streaming import (
@@ -124,3 +129,79 @@ def test_outer_interval_join_stream_equals_batch(spark, sf_dir):
     # both classes are present: true matches and watermark-resolved nulls
     assert got.filter("c_event_id IS NULL").count() > 0
     assert got.filter("c_event_id IS NOT NULL").count() > 0
+
+
+class _ProgressListener(StreamingQueryListener):
+    """Collects every micro-batch's progress; callbacks arrive on a Py4J
+    thread, a query's progress events before its termination event."""
+
+    def __init__(self):
+        self._lock = threading.Lock()
+        self.terminated = 0
+        self.progress = []
+
+    def onQueryStarted(self, event):
+        pass
+
+    def onQueryProgress(self, event):
+        with self._lock:
+            self.progress.append(json.loads(event.progress.json))
+
+    def onQueryIdle(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        with self._lock:
+            self.terminated += 1
+
+    def take(self, timeout_s=30.0):
+        """Wait for one drain to terminate; hand over its progress."""
+        end = time.monotonic() + timeout_s
+        while time.monotonic() < end:
+            with self._lock:
+                if self.terminated:
+                    break
+            time.sleep(0.02)
+        with self._lock:
+            out = self.progress
+            self.terminated, self.progress = 0, []
+        return out
+
+
+def test_drain_batches_and_state_partitions_on_runtime_progress(spark, sf_dir):
+    """Pins the drain mechanics on StreamingQueryListener progress: the
+    inner attribution join and the dedup skip the trailing no-data
+    batch (one micro-batch each), the outer join keeps it (its null rows
+    are emitted only there), every state operator runs
+    min(defaultParallelism, 8) partitions, and the session's own
+    settings come back after each drain."""
+    from big_data_pipeline_spark.workloads import streaming_surface as ss
+
+    parts_key = "spark.sql.shuffle.partitions"
+    nodata_key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    want_parts = min(spark.sparkContext.defaultParallelism, 8)
+    saved = {k: spark.conf.get(k) for k in (parts_key, nodata_key)}
+    # A session value the drain would never pick, so a missed restore shows.
+    session = {parts_key: str(want_parts + 1), nodata_key: "true"}
+    listener = _ProgressListener()
+    spark.streams.addListener(listener)
+    try:
+        for k, v in session.items():
+            spark.conf.set(k, v)
+        for query, batches in (
+            (ss.stream_click_purchase_attribution, 1),
+            (ss.stream_dedup_exact, 1),
+            (ss.stream_unattributed_purchases, 2),
+            (ss.stream_stateful_user_stats, 1),
+        ):
+            query(spark, sf_dir)
+            progress = listener.take()
+            assert len(progress) == batches, query.__name__
+            ops = [o for p in progress for o in p["stateOperators"]]
+            assert ops, query.__name__
+            assert {o["numShufflePartitions"] for o in ops} == {want_parts}
+            assert {k: spark.conf.get(k) for k in session} == session
+    finally:
+        spark.streams.removeListener(listener)
+        for k, v in saved.items():
+            spark.conf.set(k, v)
