@@ -1,42 +1,36 @@
 """Connected components over near-duplicate pairs: dedup clustering.
 
-Pair finding (Jaccard / MinHash / SimHash) yields edges; the dedup
-DECISION needs components — every document in a cluster except one
-representative gets dropped. This is the canonical iterative-algorithm
-shape Spark handles with a driver loop over lazy plans:
+Pair finding (Jaccard / MinHash / SimHash / blocking) yields edges; the
+dedup DECISION needs components — every document in a cluster except
+one representative gets dropped. ``connected_components`` is the one
+operator for it, with one count-first gate:
 
-    label(v) <- min(label(v), min over neighbors' labels)
+- at or below ``operators.graph.DRIVER_MAX_EDGES`` pairs (aggregated
+  entity graphs, near-dup pair sets, DBSCAN cell graphs) the pairs are
+  collected once and solved in numpy on the driver (``_cc_driver``);
+- above it, the large-star/small-star loop (Kiveris et al., "Connected
+  Components in MapReduce and Beyond", SoCC'14) runs distributed in
+  O(log d) rounds (``_cc_star``), each round's lineage cut by a
+  ``localCheckpoint``.
 
-repeated to fixpoint. Each iteration is two shuffles (join + groupBy);
-``localCheckpoint`` truncates the lineage so the plan doesn't grow with
-iterations (the classic iterative-Spark trap). Iteration count is
-O(graph diameter) — near-dup clusters are tiny cliques, so 2-3 rounds.
-
-At 100 TB use the large-star/small-star optimization (Kiveris et al.,
-"Connected Components in MapReduce and Beyond", SoCC'14) to cut rounds
-to O(log d); the fixpoint loop here is the same skeleton.
+Both paths return the same (id, cluster_id = component minimum) frame;
+the recursive-CTE oracles and tests/test_clusters.py pin the contract.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-# Edge sets at or below this size solve on the driver (~32 MB of pairs
-# at the default): same device as operators/graph.pagerank's
-# _pagerank_driver and the DBSCAN cell union-find — aggregated entity
-# graphs are key-cardinality-bounded, and iterating a driver-small
-# graph through cluster rounds spends everything on scheduling
-# (measured: 8 star rounds ≈ 3-5 s at sf0.1 vs <1 s collected).
-# Pass driver_max_edges=0 to force the distributed loop.
-_CC_DRIVER_MAX_EDGES = 2_000_000
+from big_data_pipeline_spark.operators import graph as _graph
 
 
 def _cc_driver(pairs_df: DataFrame, id_type) -> DataFrame:
     """Driver connected components over a DRIVER-SMALL (a, b) frame.
 
     Returns the identical (id, cluster_id = component minimum) frame
-    the distributed loops produce. Deterministic: output sorted by id.
+    ``_cc_star`` produces. Deterministic: output sorted by id.
 
     Vectorized (r10, verdict item 8): the old path collected up to
     2 M pairs as driver-side Python Row objects and looped a pure-
@@ -51,11 +45,9 @@ def _cc_driver(pairs_df: DataFrame, id_type) -> DataFrame:
     non-increasing and the component-minimum node can never be
     re-hooked (nothing is smaller), so the fixpoint labels every node
     with its component minimum — the same contract as the union-find
-    this replaces (equality with the distributed loop stays pinned in
-    tests). Measured 2-11 rounds / <1.5 s on 2 M-edge chain, long-
+    this replaces (equality with ``_cc_star`` stays pinned in tests). Measured 2-11 rounds / <1.5 s on 2 M-edge chain, long-
     cycle, and random multigraphs."""
     import numpy as np
-    from pyspark.sql import types as T
 
     pdf = pairs_df.toPandas()
     a = pdf.iloc[:, 0].to_numpy()
@@ -92,115 +84,18 @@ def _cc_driver(pairs_df: DataFrame, id_type) -> DataFrame:
     return pairs_df.sparkSession.createDataFrame(out, schema)
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 20,
-    driver_max_edges: int = _CC_DRIVER_MAX_EDGES,
-) -> DataFrame:
-    """(id, cluster_id) for every vertex in ``edges``; cluster_id is the
-    minimum vertex id reachable from the vertex."""
-    both = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-        # materialize once: every round re-joins this frame, and without
-        # the checkpoint each round would re-execute the entire upstream
-        # pair-finding pipeline (shingle→minhash→join) from scratch.
-        # Lazy: round 1's convergence count materializes it in-job.
-        .localCheckpoint(eager=False)
-    )
-    if driver_max_edges:
-        n_pairs = both.count()  # materializes the checkpoint in-job
-        if n_pairs <= driver_max_edges:
-            return _cc_driver(both, both.schema["a"].dataType)
-    labels = (
-        both.select(F.col("a").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-        .localCheckpoint(eager=False)
-    )
-    converged = False
-    for _ in range(max_iter):
-        neighbor_min = (
-            both.join(labels, both.b == labels.id)
-            .groupBy("a")
-            .agg(F.min("label").alias("nmin"))
-        )
-        updated = (
-            labels.join(neighbor_min, labels.id == neighbor_min.a, "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
-                ).alias("label"),
-                (
-                    F.coalesce(F.col("nmin"), F.col("label")) < F.col("label")
-                ).alias("changed"),
-            )
-            # lazy lineage cut: the convergence count below is a FULL
-            # action (every partition aggregates), so it materializes the
-            # checkpoint in the same job — one pass + one job per round
-            # instead of an eager-checkpoint job followed by a count job
-            .localCheckpoint(eager=False)
-        )
-        n_changed = updated.filter("changed").count()
-        labels = updated.drop("changed")
-        if n_changed == 0:
-            converged = True
-            break
-    if not converged:
-        # partially propagated labels would split one component into
-        # several cluster_ids and dedup would keep false representatives
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            "(rounds needed ~ largest component diameter); raise max_iter "
-            "or use connected_components_star (O(log d) rounds)"
-        )
-    return labels.select("id", F.col("label").alias("cluster_id"))
-
-
-def dedup_representatives(
-    docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """Drop all but the minimum-id document of each near-dup cluster.
-
-    ``pairs`` must have columns (doc_id1, doc_id2). Documents in no
-    pair survive untouched.
-    """
-    cc = connected_components(pairs, "doc_id1", "doc_id2")
-    drop = cc.filter(F.col("id") != F.col("cluster_id")).select(
-        F.col("id").alias(id_col)
-    )
-    return docs.join(drop, id_col, "left_anti")
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 20,
-    driver_max_edges: int = _CC_DRIVER_MAX_EDGES,
-) -> DataFrame:
-    """Connected components via alternating large-star/small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — the O(log d) round-complexity scale path that the plain
-    min-label propagation loop (``connected_components``) cites.
+def _cc_star(raw: DataFrame, max_iter: int = 20) -> DataFrame:
+    """Connected components of a raw (a, b) pair frame via alternating
+    large-star/small-star — the O(log d) distributed path.
 
     Each round rewires the graph toward a star per component:
     - large-star: every node's STRICTLY LARGER neighbors attach to the
       minimum of its closed neighborhood;
     - small-star: every node's smaller-or-equal neighbors (and the node
       itself) attach to that minimum.
-    Both are one groupBy (closed-neighborhood min) + one join per pass —
-    the same shuffle budget per round as one propagation step, but
-    components of diameter d need O(log d) rounds instead of O(d):
-    a million-node chain converges in ~20 rounds, not a million.
-
-    Returns (id, cluster_id) with cluster_id = component minimum,
-    identical to ``connected_components`` (equivalence is tested on
-    random graphs and pathological chains).
+    Both are one groupBy (closed-neighborhood min) + one join per pass,
+    and components of diameter d need O(log d) rounds: a million-node
+    chain converges in ~20 rounds, not a million.
     """
 
     def symmetrize(e: DataFrame) -> DataFrame:
@@ -240,18 +135,6 @@ def connected_components_star(
             .distinct()
         )
 
-    # materialize the raw pair projection once: cur AND isolated both
-    # consume it, and without this the upstream pair-finding pipeline
-    # (shingle→minhash→join) executes twice
-    # lazy: the first fingerprint(cur) materializes raw and cur in one
-    # job; isolated then reads raw from the cache
-    raw = edges.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
-    ).localCheckpoint(eager=False)
-    if driver_max_edges:
-        n_pairs = raw.count()  # materializes the checkpoint in-job
-        if n_pairs <= driver_max_edges:
-            return _cc_driver(raw, raw.schema["a"].dataType)
     # Corpus-scale loop frames cache DISK_ONLY: the default
     # MEMORY_AND_DISK level had per-round edge caches competing with 32
     # concurrent tasks' execution memory — the sf10 stress graph (31 M
@@ -309,9 +192,9 @@ def connected_components_star(
         # several parents, and the join below would emit conflicting
         # cluster rows per node — fail loudly rather than dedup wrongly
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} "
-            "rounds; raise max_iter (rounds needed ~ log2 of the largest "
-            "component's diameter)"
+            f"connected components did not converge in {max_iter} star "
+            "rounds (rounds needed ~ log2 of the largest component's "
+            "diameter)"
         )
     # at convergence every non-root node points at its component root
     roots = cur.select(F.col("a").alias("id"), F.col("b").alias("cluster_id"))
@@ -321,3 +204,31 @@ def connected_components_star(
             "id", F.coalesce(F.col("cluster_id"), F.col("id")).alias("cluster_id")
         )
     )
+
+
+def connected_components(
+    edges: DataFrame, src: str = "src", dst: str = "dst"
+) -> DataFrame:
+    """(id, cluster_id) for every vertex in ``edges``; cluster_id is the
+    minimum vertex id reachable from the vertex.
+
+    Ids must be integral: the star loop's convergence fingerprint sums
+    them, so string ids would only fail above the gate — reject them
+    up front so success never depends on the edge count."""
+    for c in (src, dst):
+        if not isinstance(edges.schema[c].dataType, T.IntegralType):
+            raise TypeError(
+                f"connected_components needs integral ids; {c!r} is "
+                f"{edges.schema[c].dataType.simpleString()}"
+            )
+    # materialize the raw pair projection once: the gate's count, the
+    # driver collect and the star loop's two consumers (cur, isolated)
+    # all read it, and without this the upstream pair-finding pipeline
+    # (shingle→minhash→join) would re-execute for each. Lazy: the
+    # gate's count materializes it in-job.
+    raw = edges.select(
+        F.col(src).alias("a"), F.col(dst).alias("b")
+    ).localCheckpoint(eager=False)
+    if raw.count() <= _graph.DRIVER_MAX_EDGES:
+        return _cc_driver(raw, raw.schema["a"].dataType)
+    return _cc_star(raw)

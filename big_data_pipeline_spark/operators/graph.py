@@ -25,6 +25,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Driver-solve budget for graph operators: edge sets at or below it are
+# collected once and iterated in numpy (here and in
+# dedup/clusters.connected_components). Aggregated entity graphs are
+# key-cardinality-bounded, and iterating a driver-small graph through
+# cluster rounds spends everything on scheduling (measured: 8 star
+# rounds ≈ 3-5 s at sf0.1 vs <1 s collected). Read at call time, so
+# tests force the distributed loops by patching it to 0.
+DRIVER_MAX_EDGES = 2_000_000
+
 
 def _pagerank_driver(
     trans: DataFrame, nodes: DataFrame, n: int, damping: float, max_iter: int
@@ -81,7 +90,6 @@ def pagerank(
     src: str = "src",
     dst: str = "dst",
     weight: str | None = None,
-    driver_max_edges: int = 2_000_000,
 ) -> DataFrame:
     """(id, rank) for every node; ranks sum to 1.
 
@@ -97,9 +105,8 @@ def pagerank(
     an action anyway.
 
     Graphs whose NORMALIZED edge list fits on the driver
-    (``driver_max_edges``; ~100 MB at the default) solve there in one
-    bounded collect — see ``_pagerank_driver``. Pass 0 to force the
-    distributed loop.
+    (``DRIVER_MAX_EDGES``; ~100 MB) solve there in one bounded
+    collect — see ``_pagerank_driver``.
     """
     w = F.col(weight) if weight else F.lit(1.0)
     # materialize the edge projection once: it feeds BOTH the out-weight
@@ -129,9 +136,9 @@ def pagerank(
     if n == 0:
         # empty edge frame -> empty ranks, not a ZeroDivisionError
         return nodes_raw.withColumn("rank", F.lit(0.0))
-    if 0 < driver_max_edges and n <= driver_max_edges:
+    if n <= DRIVER_MAX_EDGES:
         m = trans.count()  # checkpointed: a metadata-cheap count
-        if m <= driver_max_edges:
+        if m <= DRIVER_MAX_EDGES:
             # collect straight from the checkpointed trans (nodes_raw
             # derives from it) — the distributed loop's repartition+
             # checkpoint pair below would be two wasted jobs (and

@@ -178,29 +178,23 @@ FROM customer a JOIN customer b
 def entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive entity resolution: the blocking-pair candidates
     chained into clusters (A~B and B~C put A, B, C in one entity even
-    when A and C differ in two positions). Reuses the SAME distributed
-    connected-components machinery as the document-dedup clustering —
+    when A and C differ in two positions). Reuses the SAME
+    connected-components operator as the document-dedup clustering —
     entity resolution and near-dedup are one graph problem at scale —
-    and the same recursive-CTE oracle shape proves the iterative
-    label-propagation result cell-exact."""
+    and the same recursive-CTE oracle shape proves the result
+    cell-exact."""
     from pyspark.sql import functions as F
 
-    from big_data_pipeline_spark.dedup.clusters import (
-        connected_components_star,
-    )
+    from big_data_pipeline_spark.dedup.clusters import connected_components
 
     pairs = entity_blocking_pairs(spark, sf_dir).select(
         "custkey_a", "custkey_b"
     )
-    # large-star/small-star (O(log d) rounds), not plain min-label
-    # propagation: customer names chain through one-digit edits into
-    # components whose diameter grows with the key space, so LPA's
-    # O(d)-round cost went superlinear at the sf10 stress corpus
-    # (17.4x on 10x data; star converges in a near-constant round
-    # count -> back to ~linear). Output contract is identical
-    # (cluster_id = component minimum; equivalence pinned in
-    # tests/test_clusters.py on random and pathological graphs).
-    return connected_components_star(pairs, "custkey_a", "custkey_b").select(
+    # customer names chain through one-digit edits into components
+    # whose diameter grows with the key space; above the driver gate
+    # (~2.6 M pairs at sf1) the operator's star loop still converges
+    # in O(log d) rounds
+    return connected_components(pairs, "custkey_a", "custkey_b").select(
         F.col("id").alias("custkey"), "cluster_id"
     )
 
@@ -528,19 +522,10 @@ def golden_record_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from big_data_pipeline_spark.dedup.clusters import (
-        connected_components_star,
-    )
+    from big_data_pipeline_spark.dedup.clusters import connected_components
 
     scored = record_linkage_score(spark, sf_dir)
-    # star-CC, not the plain LPA loop: the r9 sf10 stress measured this
-    # query at 15.8x on 10x data with LPA (the same superlinear
-    # signature entity_clusters showed in r7 — O(d) label-propagation
-    # rounds, each a full edge shuffle). Large-star/small-star
-    # converges in O(log d) rounds and returns the identical
-    # min-id-per-component labeling (equivalence tested in
-    # tests/test_clusters.py), so the oracle is untouched.
-    clusters = connected_components_star(
+    clusters = connected_components(
         scored.select("rep_a", "rep_b"), "rep_a", "rep_b"
     ).select(F.col("id").alias("rep_key"), "cluster_id")
     profiles = (

@@ -1234,7 +1234,7 @@ _BPE_ROUNDS = 8
 _BPE_EOW = "</w>"
 # Below this distinct-word count the weighted vocab is collected and
 # the rounds run in-process — the same gated driver-solve as
-# operators/graph.py's PageRank (driver_max_edges): the vocab is a
+# operators/graph.py's PageRank (DRIVER_MAX_EDGES): the vocab is a
 # MODEL (bounded by the language, not the corpus — production BPE
 # trainers hold exactly this word-count table in RAM), so iterating K
 # rounds on it locally beats K Spark jobs of pure scheduling overhead

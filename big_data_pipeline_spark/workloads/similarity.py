@@ -1630,8 +1630,8 @@ LIMIT {_RRF_OUT}
 # is (1) one map-side-combinable groupBy to cells — bounded by grid
 # resolution, not corpus size, (2) an 8-shift EQUI-join between core
 # cells (each cell emits 8 neighbor keys; no distance join at all),
-# (3) connected components on the tiny cell graph via the same
-# distributed large-star machinery as the dedup clusters, (4) keyed
+# (3) connected components on the cell graph via the same operator as
+# the dedup clusters (grid-bounded, so it solves on the driver), (4) keyed
 # joins to label points. The DuckDB oracle recomputes the components
 # with a recursive CTE — different algorithm, must agree cell-exact.
 # Cell coordinates come from floor(x/eps) on IEEE doubles — identical
@@ -1641,7 +1641,6 @@ _DBSCAN_EPS = 0.04
 _DBSCAN_MINPTS = 4
 _DBSCAN_OFF = 512  # shifts cell coords positive for the packed cell id
 _DBSCAN_W = 4096
-_DBSCAN_DRIVER_MAX_CELLS = 100_000  # union-find gate (cell graph = model)
 
 
 def grid_density_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1714,36 +1713,11 @@ def grid_density_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["nx", "ny"],
     ).select("a", "b")
     # The cell graph is bounded by GRID RESOLUTION, not corpus size
-    # (≤ (range/eps)² cells no matter how many points) — a model-sized
-    # graph like the IVF centroids or the pagerank driver-solve gate,
-    # so union-find on the collected CELL edges (never row data) beats
-    # ~10 rounds of distributed iteration. Above the cap (a grid so
-    # fine it stops being a model) fall back to the distributed
-    # large-star machinery.
-    if core.count() <= _DBSCAN_DRIVER_MAX_CELLS:
-        e = edges.collect()
-        parent: dict[int, int] = {}
-
-        def find(x: int) -> int:
-            while parent.setdefault(x, x) != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for r in e:
-            ra, rb = find(r.a), find(r.b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        labels = [(x, find(x)) for x in parent]
-        comp = (
-            spark.createDataFrame(labels, "cid long, cluster_id long")
-            if labels
-            else spark.createDataFrame([], "cid long, cluster_id long")
-        )
-    else:  # pragma: no cover - exercised only on degenerate grids
-        comp = connected_components(edges, "a", "b").select(
-            F.col("id").alias("cid"), "cluster_id"
-        )
+    # (≤ (range/eps)² cells no matter how many points), so it stays
+    # under the operator's driver gate and solves in one collect.
+    comp = connected_components(edges, "a", "b").select(
+        F.col("id").alias("cid"), "cluster_id"
+    )
     # core cells with no core neighbor are their own singleton cluster
     cell_cluster = (
         core.join(F.broadcast(comp), "cid", "left")

@@ -60,9 +60,10 @@ def test_pagerank_empty_edges_returns_empty(spark):
     assert set(out.columns) == {"id", "rank"}
 
 
-def test_driver_and_distributed_paths_agree(spark):
+def test_driver_and_distributed_paths_agree(spark, monkeypatch):
     """The small-graph driver solve and the distributed loop must agree
     to float tolerance on the same graph (association orders differ)."""
+    from big_data_pipeline_spark.operators import graph
     from big_data_pipeline_spark.operators.graph import pagerank
 
     edges = spark.createDataFrame(
@@ -71,11 +72,10 @@ def test_driver_and_distributed_paths_agree(spark):
         "src string, dst string, weight double",
     )
     fast = {r.id: r.rank for r in pagerank(edges, max_iter=8, weight="weight").collect()}
+    monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", 0)
     slow = {
         r.id: r.rank
-        for r in pagerank(
-            edges, max_iter=8, weight="weight", driver_max_edges=0
-        ).collect()
+        for r in pagerank(edges, max_iter=8, weight="weight").collect()
     }
     assert set(fast) == set(slow)
     for k in fast:
