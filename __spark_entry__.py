@@ -85,87 +85,18 @@ _MODULES = (
 )
 
 
-# The driver's correctness run covers a budgeted prefix of the
-# registry (observed rounds 1-5: exactly the first 50 entries), so
-# order IS coverage. Rounds 1-5 accumulated driver rows for 195 of the
-# queries (hash-green or rows-only-no-err, 0 genuine failures across
-# five rounds); 92 registered queries had never held a window slot
-# entering round 6 (listed in the r6 rotation queue below).
+# The correctness gate runs a budgeted prefix of the registry (the
+# first 50 entries), so order IS coverage. Every registered query has
+# held a window slot at least once, so the window is a freshness
+# rotation; queries not named here follow in registry order. The 50
+# slots:
 #
-# Round-6 window (VERDICT r5 item 1): the 8 never-regress ANCHORS (one
-# per SURVEY §2 / LLM-pipeline family), then 5 RE-PROOFS of operators
-# whose code changed this round and whose r05 rows therefore describe
-# superseded code (customer_revenue_pareto single-pass rewrite,
-# lmoments_by_priority decimal-product overflow fix,
-# mann_kendall_trend + theilsen_trend_per_user trailing-cap gate,
-# simhash_near_dups short-doc oracle clamp), then 2 NEW/CONVERTED ops
-# (ann_recall_report rows-only -> cell-exact full-replay oracle;
-# multimodal_jpeg_block_stats, the new baseline-JPEG decode), then 35
-# FIRST-TIMERS — 33 from the rotation queue in its documented order
-# (bigram_lm_quality and ks_drift_stat pulled forward because they
-# also carry this round's changes: degenerate-doc gate; single-pass
-# CDFs) plus the two r6 rows-only->cell-exact conversions knn_lsh_topk
-# and approx_theta_overlap, themselves never driver-checked. All 50
-# are hash-green in the local tools/check_oracle.py sweep; every
-# window entry now carries an oracle twin (no weak rows possible).
-#
-# Round-7 window (VERDICT r6 item 1): the driver has now checked 237
-# of 289 registry queries across r01-r06 with zero genuine failures;
-# exactly 52 have never held a window slot. This round the window IS
-# the rotation queue: all 52 never-checked entries in registry order,
-# minus the two weakest rows-only sketch queries (approx_sketch_rollup,
-# approx_corpus_stats — no oracle twin by design, so a window slot only
-# buys a rows>0 check; they mop up in r8 alongside this round's
-# rows-only->cell-exact conversions). 50 slots, 50 first-timers; after
-# this round 287/289 are driver-checked.
-#
-# Round-8 window (VERDICT r7 item 1 + ADVICE r7 item 3): cumulative
-# driver coverage entering this round is 287/289 distinct queries
-# (r01-r07 window keys, verified by set-union over the seven
-# CORRECTNESS_r0*.json artifacts; the five names ADVICE questioned all
-# held earlier slots: knn_ivf_topk r02, stream_heavy_hitter_users r03,
-# stream_stateful_user_stats r02, bpe_merge_learn r04,
-# stock_pipeline_predict r02+r03 — but those rows predate the r6/r7
-# cell-exact conversions, so they re-prove here). The 50 slots:
-#
-#   (a) 15 MOP-UP / RE-PROOF — the 2 never-checked rows-only sketches
-#       (approx_sketch_rollup, approx_corpus_stats → 289/289 cumulative
-#       after this round); the r7 rows-only→cell-exact conversions
-#       (stock_pipeline_predict, bpe_merge_learn); the r7 strategy
-#       changes (entity_clusters star-CC, semdedup_prune closure-
-#       broadcast, ann_recall_report single-join); the r6 conversions
-#       never driver-checked in cell-exact form (knn_lsh_topk,
-#       approx_theta_overlap, simhash_near_dups); the three stale
-#       rows-only-era checks ADVICE flagged (knn_ivf_topk,
-#       stream_heavy_hitter_users, stream_stateful_user_stats); and
-#       the two r7 bench-wobble queries (sequence_pattern_counts,
-#       latest_event_per_user) to confirm no silent plan change.
-#   (b) 5 R8-CHANGED — queries whose code changes this round:
-#       incremental_neardup_batch (persisted-corpus-shingle path,
-#       VERDICT #3), multimodal_png_pixel_stats + nb_lang_confusion
-#       (heap bounding, VERDICT #4), multimodal_gif_frame_stats
-#       (descriptor-bounds ValueError, ADVICE #4), rfm_user_segments
-#       (third wobble query).
-#   (c) 30 OLDEST-VINTAGE — stability re-confirmation of queries last
-#       driver-checked in r01/r02 (67 such; the first 30 in registry
-#       order, skipping any already in (a)).
-#
-# Round-9 window (VERDICT r8 item 1): cumulative driver coverage
-# entering this round is 289/289 — the window is now a pure freshness
-# rotation. The 50 slots:
-#
-#   (a) 35 OLDEST-VINTAGE — every remaining query last driver-checked
-#       in r01/r02 (the full residue after r8's 30; computed as
-#       registry keys grouped by last CORRECTNESS_r* appearance).
-#       After this round no query's last driver check is older than
-#       r03.
-#   (b) 2 RE-PROOF — incremental_neardup_batch (r8 refactor into the
-#       shared neardup_batch_vs_corpus core, training_data.py:559 —
-#       re-prove post-refactor) and split_leakage_audit (its
-#       repartition-before-BNLJ plan shape gets pinned in
-#       tests/test_plans.py this round; re-prove alongside).
-#   (c) 13 R3-VINTAGE — next-oldest fills, first 13 in alphabetical
-#       registry order among the 38 queries last checked in r03.
+#   (a) 35 OLDEST-VINTAGE — every query whose last gate check was in
+#       r01/r02 (registry keys grouped by last CORRECTNESS_r*
+#       appearance).
+#   (b) 12 RE-PROOF — queries whose plans changed after their last
+#       gate check (see the comment in the tuple).
+#   (c) 3 R3-VINTAGE — next-oldest fills, in registry order.
 _PRIORITY = (
     # --- (a) oldest-vintage: last driver-checked r01
     "above_customer_avg_orders",

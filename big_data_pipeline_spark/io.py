@@ -38,9 +38,8 @@ TABLES = (
 _TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
 
-def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one test-corpus table: ``{sf_dir}/{name}.parquet``."""
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+def _normalize_ts(df: DataFrame, name: str) -> DataFrame:
+    """Normalize ``name``'s ``_TS_COLS`` on a batch or streaming frame."""
     for col in _TS_COLS.get(name, ()):
         if col not in df.columns:
             continue
@@ -54,6 +53,28 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # overriding the TZ via extra_conf would silently shift ts.
             df = df.withColumn(col, F.col(col).cast("timestamp"))
     return df
+
+
+def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one test-corpus table: ``{sf_dir}/{name}.parquet``."""
+    return _normalize_ts(
+        spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")), name
+    )
+
+
+def read_table_stream(spark: SparkSession, path: str, name: str) -> DataFrame:
+    """File-stream source over ``name``'s parquet files at ``path``, a
+    directory or a glob (FileStreamSource derives its base path from the
+    non-glob prefix, so a single file must be globbed).
+
+    Streaming scans need an explicit schema; one batch probe of the
+    footers supplies it, so ``ts`` keeps whichever physical encoding the
+    files carry and ``_normalize_ts`` maps it exactly as ``read_table``
+    does. Raises ``AnalysisException`` ``UNABLE_TO_INFER_SCHEMA`` when
+    ``path`` holds no parquet file yet.
+    """
+    schema = spark.read.parquet(path).schema
+    return _normalize_ts(spark.readStream.schema(schema).parquet(path), name)
 
 
 def read_json_records(

@@ -87,14 +87,6 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` when no cluster
     manager supplied one; on a real cluster leave it unset.
     """
-    # Export the protobuf runtime path BEFORE the JVM launches: local-mode
-    # python workers inherit the JVM's environment, so the
-    # transformWithStateInPandas worker protocol only works if PYTHONPATH
-    # is settled now (no-op when protobuf is installed or absent).
-    from big_data_pipeline_spark.streaming.stateful import ensure_protobuf
-
-    ensure_protobuf()
-
     builder = SparkSession.builder.appName(app_name)
     if master is None and "SPARK_GRAFT_CPUS" in os.environ:
         master = f"local[{os.environ['SPARK_GRAFT_CPUS']}]"

@@ -10,14 +10,17 @@ Implemented operator: per-user running statistics (event count, value
 sum, exponentially weighted moving average of ``value``) maintained in
 a GroupState, emitting one row per key per micro-batch.
 
-Timeout note: a continuously running deployment should pass
-``GroupStateTimeout.ProcessingTimeTimeout`` and call
-``state.setTimeoutDuration`` so quiet keys stop consuming state-store
-memory. This module defaults to ``NoTimeout`` because pending
-processing-time timeouts keep scheduling extra micro-batches after an
-``availableNow`` drain has consumed all data — the query then never
-terminates (observed: hundreds of empty batches) — and the drain is
-this engine's verification path.
+Timeout note: both operators here run with ``NoTimeout``, so a key's
+state lives as long as the checkpoint. That fits the ``availableNow``
+drain, this engine's verification path, whose checkpoint is deleted
+after one run (pending processing-time timeouts would also keep
+scheduling empty micro-batches after the data is consumed, so the
+drain would never terminate). A continuously running deployment would
+have to add eviction itself: pass
+``GroupStateTimeout.ProcessingTimeTimeout``, call
+``state.setTimeoutDuration`` in the update function, and handle
+``state.hasTimedOut`` there by emitting the key's final row and calling
+``state.remove()``.
 
 The EWMA recurrence is order-sensitive; events are sorted by (ts,
 event_id) inside each batch, and correctness is asserted against a
@@ -27,7 +30,6 @@ the recurrence sees every event exactly once, in order).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 from typing import Any
 
@@ -59,9 +61,8 @@ _ALPHA = 0.2
 def _advance_stats(
     stats: tuple, batches: Iterator[pd.DataFrame]
 ) -> tuple:
-    """Shared recurrence for BOTH stateful APIs (applyInPandasWithState
-    and transformWithStateInPandas): one implementation, so the
-    equivalence the tests assert can't silently desynchronize."""
+    """The per-user recurrence: fold the batches into (count, sum, EWMA),
+    in (ts, event_id) order."""
     n, total, ewma = stats
     for pdf in batches:
         pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
@@ -100,144 +101,15 @@ def _update_user_stats(
     yield _stats_row(key, stats)
 
 
-def running_user_stats(
-    events: DataFrame, timeout: str = GroupStateTimeout.NoTimeout
-) -> DataFrame:
-    """Stateful per-user running stats over a streaming events frame.
-
-    Pass ``GroupStateTimeout.ProcessingTimeTimeout`` for continuous
-    deployments (see module docstring on why drains must use NoTimeout).
-    """
+def running_user_stats(events: DataFrame) -> DataFrame:
+    """Stateful per-user running stats over a streaming events frame
+    (see the module docstring's timeout note)."""
     return events.groupBy("user_id").applyInPandasWithState(
         _update_user_stats,
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="update",
-        timeoutConf=timeout,
-    )
-
-
-# transformWithStateInPandas speaks a protobuf protocol between the
-# python worker and the JVM state server; the container ships no
-# installed ``protobuf`` package and pip is unavailable. The public
-# google-cloud-sdk on this image DOES bundle a pure-Python protobuf
-# runtime (6.32.0, appengine platform dir) — one minor version behind
-# the 6.33 gencode in pyspark's StateMessage_pb2, bridged via
-# protobuf's own documented escape hatch
-# (TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK; wire format is stable
-# across that gap, verified by a serialize/parse round-trip in
-# tests/test_stateful_streaming.py actually exercising TWS end-to-end).
-_VENDORED_PROTOBUF_DIRS = (
-    "/usr/lib/google-cloud-sdk/platform/google_appengine",
-)
-
-
-def ensure_protobuf() -> bool:
-    """Make ``google.protobuf`` importable, borrowing a vendored
-    pure-Python runtime when no installed package exists.
-
-    Must run BEFORE the SparkSession (and thus the python-worker daemon)
-    starts: workers read PYTHONPATH at launch, so the path and the
-    version-check escape hatch are exported to the process environment,
-    not just this interpreter's ``sys.path``.
-    """
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        pass
-    import sys
-
-    for d in _VENDORED_PROTOBUF_DIRS:
-        if not os.path.isdir(os.path.join(d, "google", "protobuf")):
-            continue
-        os.environ.setdefault("TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK", "true")
-        if d not in sys.path:
-            sys.path.insert(0, d)
-        pp = os.environ.get("PYTHONPATH", "")
-        if d not in pp.split(os.pathsep):
-            os.environ["PYTHONPATH"] = d + (os.pathsep + pp if pp else "")
-        try:
-            import google.protobuf  # noqa: F401
-            from pyspark.sql.streaming.proto import StateMessage_pb2  # noqa: F401
-
-            return True
-        except Exception:  # noqa: BLE001 — any breakage means "not usable"
-            continue
-    return False
-
-
-def tws_available() -> bool:
-    """True when the runtime can execute transformWithStateInPandas
-    (an importable ``google.protobuf``, installed or vendored)."""
-    return ensure_protobuf()
-
-
-class RunningUserStatsProcessor:
-    """Spark 4 ``StatefulProcessor`` with the same semantics as
-    ``_update_user_stats`` (count / sum / EWMA per user).
-
-    transformWithStateInPandas is the successor API to
-    applyInPandasWithState: typed state handles (value/list/map state),
-    timers, and TTL live on a ``StatefulProcessorHandle`` instead of one
-    opaque GroupState tuple. Requires the RocksDB state store provider.
-    The equivalence test (tests/test_stateful_streaming.py) asserts both
-    APIs produce identical rows when the runtime supports TWS.
-    """
-
-    def init(self, handle) -> None:  # StatefulProcessorHandle
-        self._state = handle.getValueState("stats", STATE_SCHEMA)
-
-    def handleInputRows(
-        self, key: tuple[Any, ...], rows: Iterator[pd.DataFrame], timer_values
-    ) -> Iterator[pd.DataFrame]:
-        stats = _advance_stats(
-            self._state.get() if self._state.exists() else (0, 0.0, None), rows
-        )
-        self._state.update(stats)
-        yield _stats_row(key, stats)
-
-    def close(self) -> None:
-        pass
-
-
-def running_user_stats_tws(events: DataFrame) -> DataFrame:
-    """``transformWithStateInPandas`` twin of ``running_user_stats``.
-
-    Raises RuntimeError when the runtime lacks protobuf (see
-    ``tws_available``) — callers gate on that instead of crashing deep
-    inside the streaming worker.
-    """
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas requires the protobuf package, "
-            "which this runtime does not provide"
-        )
-    from pyspark.sql.streaming import StatefulProcessor
-
-    # subclass assembled here so importing this module never needs the
-    # streaming extras; isinstance checks in Spark accept duck-typed
-    # processors only via the real base class
-    proc = type(
-        "RunningUserStatsTWS", (StatefulProcessor,), dict(RunningUserStatsProcessor.__dict__)
-    )()
-    # NOTE session-wide side effect, stated loudly: TWS requires the
-    # RocksDB state store, and the provider is a session conf read at
-    # query START — it cannot be scoped to one query. Later streaming
-    # queries in this session also run on RocksDB (fine for new
-    # checkpoints; checkpoints written by another provider are not
-    # readable across the switch).
-    spark = events.sparkSession
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=proc,
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -282,54 +154,44 @@ def _mg_insert(counters: dict, val: str, k: int) -> None:
             counters[v] -= d
 
 
-def _make_update_heavy_hitters(k: int):
-    def update(
-        key: tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            values, weights, n_seen = state.get
-            counters = dict(zip(values, weights))
-        else:
-            counters, n_seen = {}, 0
-        for pdf in batches:
-            pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
-            for uid in pdf["user_id"]:
-                _mg_insert(counters, str(uid), k)
-                n_seen += 1
-        state.update(
-            (list(counters), [int(c) for c in counters.values()], n_seen)
-        )
-        out = pd.DataFrame(
-            {
-                "event_type": key[0],
-                "value": list(counters),
-                "est_count": [int(c) for c in counters.values()],
-                "n_seen": n_seen,
-            }
-        )
-        yield out.sort_values(
-            ["est_count", "value"], ascending=[False, True], kind="mergesort"
-        )
-
-    return update
+def _update_heavy_hitters(
+    key: tuple[Any, ...],
+    batches: Iterator[pd.DataFrame],
+    state: GroupState,
+) -> Iterator[pd.DataFrame]:
+    if state.exists:
+        values, weights, n_seen = state.get
+        counters = dict(zip(values, weights))
+    else:
+        counters, n_seen = {}, 0
+    for pdf in batches:
+        pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
+        for uid in pdf["user_id"]:
+            _mg_insert(counters, str(uid), MG_K)
+            n_seen += 1
+    state.update(
+        (list(counters), [int(c) for c in counters.values()], n_seen)
+    )
+    out = pd.DataFrame(
+        {
+            "event_type": key[0],
+            "value": list(counters),
+            "est_count": [int(c) for c in counters.values()],
+            "n_seen": n_seen,
+        }
+    )
+    yield out.sort_values(
+        ["est_count", "value"], ascending=[False, True], kind="mergesort"
+    )
 
 
-def streaming_heavy_hitters(
-    events: DataFrame,
-    k: int = MG_K,
-    timeout: str = GroupStateTimeout.NoTimeout,
-) -> DataFrame:
-    """Bounded-state heavy-hitter tracking per event_type (see above).
-
-    ``k`` is the counter budget per key (state = k (value, weight)
-    pairs); threaded into the state-update closure so callers can trade
-    memory for the N/(k+1) error bound without touching the module."""
+def streaming_heavy_hitters(events: DataFrame) -> DataFrame:
+    """Bounded-state heavy-hitter tracking per event_type (see above):
+    ``MG_K`` (value, weight) pairs of state per key."""
     return events.groupBy("event_type").applyInPandasWithState(
-        _make_update_heavy_hitters(k),
+        _update_heavy_hitters,
         outputStructType=MG_OUTPUT_SCHEMA,
         stateStructType=MG_STATE_SCHEMA,
         outputMode="update",
-        timeoutConf=timeout,
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )

@@ -31,7 +31,8 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from big_data_pipeline_spark.io import read_table_stream
 
 # State-store configuration for one-shot drains (and the same provider a
 # production continuous job with large keyed state runs):
@@ -89,28 +90,27 @@ _MAX_DRAIN_STATE_PARTITIONS = 8
 
 
 @contextlib.contextmanager
-def rocksdb_drain_confs(spark: SparkSession, final_watermark_batch: bool = True):
-    """Scope the drain state-store confs to one streaming query; every
-    previous value is restored on exit so batch queries and caller-set
-    providers are untouched.
+def drain_confs(spark: SparkSession, confs: dict[str, str] | None = None):
+    """Scope the drain confs to one streaming query; every previous value
+    is restored on exit so batch queries and caller-set providers are
+    untouched.
 
     The state partition count (``spark.sql.shuffle.partitions``) is
     ``min(defaultParallelism, 8)``: one state store per core, so the
     CPU-bound stateful operators run in one wave, capped at 8 because
     each extra store pays its own commit (per-store commit rose from
-    32 ms at 2 partitions to 82 ms at 8 on a 4-core host). With
-    ``final_watermark_batch=False`` the confs also turn off Spark's
-    trailing no-data micro-batch (see ``run_available_now``)."""
-    saved: dict[str, str | None] = {}
-    confs = dict(_ROCKSDB_DRAIN_CONFS)
-    confs["spark.sql.shuffle.partitions"] = str(
-        min(spark.sparkContext.defaultParallelism, _MAX_DRAIN_STATE_PARTITIONS)
-    )
-    if not final_watermark_batch:
-        confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    32 ms at 2 partitions to 82 ms at 8 on a 4-core host). ``confs``
+    adds the caller's own settings on top (``run_available_now``: the
+    RocksDB provider and, optionally, no trailing no-data batch)."""
+    confs = {
+        "spark.sql.shuffle.partitions": str(
+            min(spark.sparkContext.defaultParallelism, _MAX_DRAIN_STATE_PARTITIONS)
+        ),
+        **(confs or {}),
+    }
+    saved = {k: spark.conf.get(k, None) for k in confs}
     try:
         for k, v in confs.items():
-            saved[k] = spark.conf.get(k, None)
             spark.conf.set(k, v)
         yield
     finally:
@@ -121,46 +121,12 @@ def rocksdb_drain_confs(spark: SparkSession, final_watermark_batch: bool = True)
                 spark.conf.set(k, v)
 
 
-def _events_schema(ts_type: T.DataType) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", ts_type),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-
-
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-stream source over the events parquet (S5's streaming twin).
-
-    Streaming scans require an explicit schema, but the corpus's physical
-    ``ts`` encoding has varied across generations (io.py ``_TS_COLS``):
-    TIMESTAMP(MICROS) isAdjustedToUTC=false (surfaces as timestamp_ntz),
-    or TIMESTAMP(NANOS) (surfaces as int64 under nanosAsLong). A one-time
-    batch probe of the footer picks the right schema, then both paths
-    normalize to the same session-TZ (UTC) µs timestamp as
-    ``io.read_table`` — batch/stream results stay comparable.
-    """
-    path = f"{sf_dir}/events.parquet"
-    # One driver-side footer read — metadata only, no data scan.
-    probed = dict(spark.read.parquet(path).dtypes)["ts"]
-    ntz = probed == "timestamp_ntz"
-    # FileStreamSource requires a directory or glob (it derives basePath
-    # from the non-glob prefix); the table is a single file, so glob it.
-    raw = (
-        spark.readStream.schema(
-            _events_schema(T.TimestampNTZType() if ntz else T.LongType())
-        )
-        .format("parquet")
-        .load(f"{path}*")
-    )
-    if ntz:
-        return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    """File-stream source over the events parquet (S5's streaming twin):
+    ``io.read_table_stream`` over the corpus file, so ``ts`` is
+    normalized by the same rule as ``io.read_table`` and batch/stream
+    results stay comparable."""
+    return read_table_stream(spark, f"{sf_dir}/events.parquet*", "events")
 
 
 def tumbling_counts_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
@@ -231,7 +197,7 @@ def run_available_now(
 
     State partitions: the drain sets ``spark.sql.shuffle.partitions`` to
     ``min(defaultParallelism, 8)`` (restored after; see
-    ``rocksdb_drain_confs``). Per-partition task+store overhead
+    ``drain_confs``). Per-partition task+store overhead
     dominates one-shot replays: 32→8 measured 6.1s→2.4s at sf0.1 for
     the interval join, and 8→4 on a 4-core host cut a pass of the
     stateful, attribution and dedup drains from 7.55s to 6.04s. The
@@ -252,7 +218,10 @@ def run_available_now(
     Keep the default for outer joins and append-mode windowed
     aggregations, whose rows are emitted only in that batch."""
     spark = stream_df.sparkSession
-    with rocksdb_drain_confs(spark, final_watermark_batch), \
+    confs = dict(_ROCKSDB_DRAIN_CONFS)
+    if not final_watermark_batch:
+        confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    with drain_confs(spark, confs), \
             tempfile.TemporaryDirectory(prefix=f"ckpt_{name}_") as ckpt:
         if output_mode == "complete":
             # Complete-mode results are corpus-shaped (e.g. one

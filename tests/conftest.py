@@ -2,10 +2,14 @@
 
 from __future__ import annotations
 
+import json
 import sys
+import threading
+import time
 from pathlib import Path
 
 import pytest
+from pyspark.sql.streaming import StreamingQueryListener
 
 REPO = Path(__file__).resolve().parents[1]
 if str(REPO) not in sys.path:
@@ -30,3 +34,49 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMALL
+
+
+class _ProgressListener(StreamingQueryListener):
+    """Collects every micro-batch's progress; callbacks arrive on a Py4J
+    thread, a query's progress events before its termination event."""
+
+    def __init__(self):
+        self._lock = threading.Lock()
+        self.terminated = 0
+        self.progress = []
+
+    def onQueryStarted(self, event):
+        pass
+
+    def onQueryProgress(self, event):
+        with self._lock:
+            self.progress.append(json.loads(event.progress.json))
+
+    def onQueryIdle(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        with self._lock:
+            self.terminated += 1
+
+    def take(self, timeout_s=30.0):
+        """Wait for one drain to terminate; hand over its progress."""
+        end = time.monotonic() + timeout_s
+        while time.monotonic() < end:
+            with self._lock:
+                if self.terminated:
+                    break
+            time.sleep(0.02)
+        with self._lock:
+            out = self.progress
+            self.terminated, self.progress = 0, []
+        return out
+
+
+@pytest.fixture()
+def progress_listener(spark):
+    """A ``_ProgressListener`` registered on the session for one test."""
+    listener = _ProgressListener()
+    spark.streams.addListener(listener)
+    yield listener
+    spark.streams.removeListener(listener)

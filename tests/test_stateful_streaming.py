@@ -3,14 +3,12 @@
 from __future__ import annotations
 
 import pandas as pd
-import pytest
 
 from big_data_pipeline_spark.io import read_table
 from big_data_pipeline_spark.streaming import run_available_now, stream_events
 from big_data_pipeline_spark.streaming.stateful import (
     _ALPHA,
     running_user_stats,
-    tws_available,
 )
 
 
@@ -44,35 +42,6 @@ def test_running_stats_match_batch_recurrence(spark, sf_dir):
     assert (got["n_events"] == want["n_events"]).all()
     assert (got["value_sum"] - want["value_sum"]).abs().max() < 1e-9
     assert (got["ewma"] - want["ewma"]).abs().max() < 1e-9
-
-
-@pytest.mark.skipif(
-    not tws_available(), reason="runtime lacks protobuf for transformWithStateInPandas"
-)
-def test_tws_matches_apply_in_pandas_with_state(spark, sf_dir):
-    """Both stateful APIs must produce identical per-user stats."""
-    from big_data_pipeline_spark.streaming.stateful import running_user_stats_tws
-
-    old = run_available_now(
-        running_user_stats(stream_events(spark, sf_dir)),
-        "t_tws_old",
-        output_mode="update",
-    )
-    new = run_available_now(
-        running_user_stats_tws(stream_events(spark, sf_dir)),
-        "t_tws_new",
-        output_mode="update",
-    )
-    assert old.count() == new.count()
-    assert old.exceptAll(new).count() == 0
-
-
-def test_tws_raises_cleanly_when_unavailable(spark, sf_dir, monkeypatch):
-    from big_data_pipeline_spark.streaming import stateful
-
-    monkeypatch.setattr(stateful, "tws_available", lambda: False)
-    with pytest.raises(RuntimeError, match="protobuf"):
-        stateful.running_user_stats_tws(stream_events(spark, sf_dir))
 
 
 def test_streaming_heavy_hitters_matches_replay_and_guarantee(spark, sf_dir):

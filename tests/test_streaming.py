@@ -4,12 +4,9 @@ the check)."""
 
 from __future__ import annotations
 
-import json
-import threading
-import time
-
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQueryListener
 
 from big_data_pipeline_spark.io import read_table
 from big_data_pipeline_spark.streaming import (
@@ -131,77 +128,88 @@ def test_outer_interval_join_stream_equals_batch(spark, sf_dir):
     assert got.filter("c_event_id IS NOT NULL").count() > 0
 
 
-class _ProgressListener(StreamingQueryListener):
-    """Collects every micro-batch's progress; callbacks arrive on a Py4J
-    thread, a query's progress events before its termination event."""
-
-    def __init__(self):
-        self._lock = threading.Lock()
-        self.terminated = 0
-        self.progress = []
-
-    def onQueryStarted(self, event):
-        pass
-
-    def onQueryProgress(self, event):
-        with self._lock:
-            self.progress.append(json.loads(event.progress.json))
-
-    def onQueryIdle(self, event):
-        pass
-
-    def onQueryTerminated(self, event):
-        with self._lock:
-            self.terminated += 1
-
-    def take(self, timeout_s=30.0):
-        """Wait for one drain to terminate; hand over its progress."""
-        end = time.monotonic() + timeout_s
-        while time.monotonic() < end:
-            with self._lock:
-                if self.terminated:
-                    break
-            time.sleep(0.02)
-        with self._lock:
-            out = self.progress
-            self.terminated, self.progress = 0, []
-        return out
-
-
-def test_drain_batches_and_state_partitions_on_runtime_progress(spark, sf_dir):
+def test_drain_batches_and_state_partitions_on_runtime_progress(
+    spark, sf_dir, progress_listener
+):
     """Pins the drain mechanics on StreamingQueryListener progress: the
     inner attribution join and the dedup skip the trailing no-data
-    batch (one micro-batch each), the outer join keeps it (its null rows
-    are emitted only there), every state operator runs
-    min(defaultParallelism, 8) partitions, and the session's own
-    settings come back after each drain."""
+    batch (one micro-batch each), the outer join and the rollup keep it
+    (their rows are emitted only there), every state operator runs
+    min(defaultParallelism, 8) partitions, the session's own settings
+    come back after each drain, and no drain leaves a state-store
+    provider set on the session."""
     from big_data_pipeline_spark.workloads import streaming_surface as ss
 
     parts_key = "spark.sql.shuffle.partitions"
     nodata_key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    provider_key = "spark.sql.streaming.stateStore.providerClass"
     want_parts = min(spark.sparkContext.defaultParallelism, 8)
-    saved = {k: spark.conf.get(k) for k in (parts_key, nodata_key)}
+    saved = {k: spark.conf.get(k, None) for k in (parts_key, nodata_key, provider_key)}
     # A session value the drain would never pick, so a missed restore shows.
     session = {parts_key: str(want_parts + 1), nodata_key: "true"}
-    listener = _ProgressListener()
-    spark.streams.addListener(listener)
     try:
         for k, v in session.items():
             spark.conf.set(k, v)
+        spark.conf.unset(provider_key)
         for query, batches in (
             (ss.stream_click_purchase_attribution, 1),
             (ss.stream_dedup_exact, 1),
             (ss.stream_unattributed_purchases, 2),
             (ss.stream_stateful_user_stats, 1),
+            (ss.stream_continuous_rollup, 2),
         ):
             query(spark, sf_dir)
-            progress = listener.take()
+            progress = progress_listener.take()
             assert len(progress) == batches, query.__name__
             ops = [o for p in progress for o in p["stateOperators"]]
             assert ops, query.__name__
             assert {o["numShufflePartitions"] for o in ops} == {want_parts}
             assert {k: spark.conf.get(k) for k in session} == session
+            assert spark.conf.get(provider_key, None) is None, query.__name__
     finally:
-        spark.streams.removeListener(listener)
         for k, v in saved.items():
-            spark.conf.set(k, v)
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _events_ts_table(ts_type, ts_values):
+    n = len(ts_values)
+    return pa.table(
+        {
+            "event_id": pa.array(range(n), pa.int64()),
+            "ts": pa.array(ts_values, ts_type),
+            "user_id": pa.array([7] * n, pa.int64()),
+            "event_type": pa.array(["click"] * n),
+            "value": pa.array([1.0] * n),
+            "props": pa.array(["{}"] * n),
+        }
+    )
+
+
+def test_both_ts_encodings_read_alike_in_batch_and_stream(spark, tmp_path):
+    """TIMESTAMP(NANOS) (int64 under nanosAsLong) and µs timestamp_ntz
+    ``events.ts`` files both go through io's one normalization: the
+    batch read and a drained stream return the same µs timestamps."""
+    base_us = 1_700_000_000_123_456
+    want = None
+    for unit, values in (
+        ("ns", [base_us * 1000 + 789, (base_us + 60_000_000) * 1000 + 1]),
+        ("us", [base_us, base_us + 60_000_000]),
+    ):
+        sf = tmp_path / unit
+        sf.mkdir()
+        pq.write_table(
+            _events_ts_table(pa.timestamp(unit), values), str(sf / "events.parquet")
+        )
+        batch = read_table(spark, str(sf), "events")
+        drained = run_available_now(stream_events(spark, str(sf)), f"t_ts_{unit}")
+        got = [
+            [r.ts for r in df.orderBy("event_id").select("ts").collect()]
+            for df in (batch, drained)
+        ]
+        assert dict(batch.dtypes)["ts"] == "timestamp", unit
+        assert got[0] == got[1], unit
+        want = want or got[0]
+        assert got[0] == want, unit
