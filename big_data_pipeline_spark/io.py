@@ -14,6 +14,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLES = (
     "region",
@@ -100,10 +101,17 @@ def read_json_records(
     return reader.json(path)
 
 
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """JSON sink (S4), JSONL layout. ``overwrite`` = the reference's
-    clear-bucket-then-put freshness semantics (``minio_utils.py:29-40``)."""
-    df.write.mode(mode).json(path)
+def read_symbol_partitioned(spark: SparkSession, path: str, fmt: str) -> DataFrame:
+    """Scan a ``symbol=<s>/``-partitioned lake layer in format ``fmt``
+    with ``symbol`` kept a string: partition type inference reads
+    ``symbol=0700`` as 700, so the inferred schema is read again with
+    ``symbol`` retyped (that read infers nothing). The session-wide
+    ``partitionColumnTypeInference`` switch would retype every read."""
+    # The format's own method, not format().load: the inference job keeps
+    # the "<fmt> at" name perfbench counts as io.schema_inference_jobs.
+    inferred = getattr(spark.read, fmt)(path).schema
+    schema = T.StructType([f for f in inferred if f.name != "symbol"]).add("symbol", "string")
+    return getattr(spark.read.schema(schema), fmt)(path)
 
 
 def write_parquet(

@@ -6,7 +6,7 @@ Reference orchestration (SURVEY.md §2.11, §3 EP1; reference
 MinIO buckets. Here each stage is a function ``(spark, config) ->
 DataFrame`` writing a layer of a parquet lake:
 
-    raw/        JSONL per-symbol bars        (reference bucket ``raw``)
+    raw/        JSONL bars, partitioned by symbol (reference bucket ``raw``)
     processed/  canonical schema, partitioned by symbol (``processed``)
     combined/   single table                  (``combined``)
     predictions/ one row per symbol           (``predictions``)
@@ -29,12 +29,14 @@ from __future__ import annotations
 import os
 import zlib
 from dataclasses import dataclass
+from functools import reduce
 
 import numpy as np
 import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
-from big_data_pipeline_spark.io import read_json_records, write_json, write_parquet
+from big_data_pipeline_spark.io import read_symbol_partitioned, write_parquet
 from big_data_pipeline_spark.ml.linreg import predict_next_close
 from big_data_pipeline_spark.schema import normalize_schema
 
@@ -81,45 +83,45 @@ def synthetic_bars(symbol: str, periods: int, seed: int) -> pd.DataFrame:
 
 
 def ingest(spark: SparkSession, cfg: PipelineConfig) -> None:
-    """Stage 1 (S1-S4): fetch per symbol → JSONL under raw/symbol=<s>/.
-
-    The fetch itself is pluggable (synthetic by default; a yfinance
-    fetcher would slot in unchanged). Partitioned directories replace
-    the reference's ``{symbol}_stock_raw_{ts}.json`` key convention.
+    """Stage 1 (S1-S4): fetch per symbol → one JSONL write into
+    raw/symbol=<s>/ (replacing the reference's ``{symbol}_stock_raw_{ts}.json``
+    keys). The fetch is pluggable (synthetic by default; a yfinance
+    fetcher would slot in unchanged). The JSON writer drops null fields,
+    so each symbol's records keep only its own suffixed columns
+    (``Close_AAPL``). With every fetch empty, raw/ is still truncated.
     """
+    frames = []
     for symbol in cfg.symbols:
         pdf = synthetic_bars(symbol, cfg.periods, cfg.seed)
         if pdf.empty:  # S3 empty-input guard (stock_ingestor.py:25-27)
             continue
         # One fetch is one driver-side frame: write it as one file, not
         # one per defaultParallelism slice that every later layer inherits.
-        df = spark.createDataFrame(pdf).coalesce(1)
-        write_json(df, os.path.join(cfg.layer("raw"), f"symbol={symbol}"))
+        frames.append(spark.createDataFrame(pdf.assign(symbol=symbol)).coalesce(1))
+    if frames:
+        df = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
+    else:
+        df = spark.createDataFrame([], "Datetime string, symbol string")
+    df.write.mode("overwrite").partitionBy("symbol").json(cfg.layer("raw"))
 
 
 def transform(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
-    """Stage 2: raw JSONL → canonical schema → processed/, by symbol.
+    """Stage 2: raw/ → canonical schema → processed/, by symbol.
 
-    The fuzzy resolver runs per symbol partition because raw column
-    names are symbol-suffixed (``Close_AAPL``) — same per-file loop
-    shape as the reference (``transform.py:36``), but each iteration is
-    a distributed job, and the loop count is the symbol count, not the
-    file count.
+    One scan of the whole raw layer, and one fuzzy resolver over the
+    union of every symbol's suffixed columns. ``symbol`` comes from the
+    partition path, as the reference takes it from the object key
+    (``transform.py:59-60``).
     """
-    outputs = []
-    for symbol in cfg.symbols:
-        path = os.path.join(cfg.layer("raw"), f"symbol={symbol}")
-        if not os.path.isdir(path):
-            continue
-        raw = read_json_records(spark, path, multiline=False)
-        outputs.append(normalize_schema(raw, symbol=symbol))
-    if not outputs:
-        raise RuntimeError("no raw data found")  # transform.py:33-34 guard
-    combined = outputs[0]
-    for df in outputs[1:]:
-        combined = combined.unionByName(df)
-    write_parquet(combined, cfg.layer("processed"), partition_by="symbol")
-    return combined
+    try:
+        raw = read_symbol_partitioned(spark, cfg.layer("raw"), "json")
+    except AnalysisException as e:  # transform.py:33-34 guard
+        if e.getCondition() in ("UNABLE_TO_INFER_SCHEMA", "PATH_NOT_FOUND"):
+            raise RuntimeError("no raw data found") from e
+        raise
+    processed = normalize_schema(raw)
+    write_parquet(processed, cfg.layer("processed"), partition_by="symbol")
+    return processed
 
 
 def combine(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
@@ -129,7 +131,7 @@ def combine(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
     metadata operation (``combine_processed.py:13-20``'s intent without
     the driver-side concat).
     """
-    df = spark.read.parquet(cfg.layer("processed"))
+    df = read_symbol_partitioned(spark, cfg.layer("processed"), "parquet")
     write_parquet(df, cfg.layer("combined"))
     return df
 

@@ -8,8 +8,8 @@ case-insensitive substring matching. Driver-side Python over
 Reference behavior being reproduced (citations into /root/reference):
 - find the datetime column by substring:   scripts/transform.py:44
 - strip per-symbol suffixes (Close_AAPL):  scripts/transform.py:50-56
-  (last match wins when several columns contain the metric name)
-- add ``symbol`` only if absent:           scripts/transform.py:59-60
+  (last match wins; over a union of symbols, the last NON-NULL match)
+- ``symbol`` from the object key / path:   scripts/transform.py:59-60
 - project to canonical columns that exist: scripts/transform.py:62-64
 - lowercase + fuzzy feature discovery:     scripts/stock_predictor.py:42-64
 
@@ -27,18 +27,6 @@ from pyspark.sql import types as T
 
 METRICS = ("Open", "High", "Low", "Close", "Volume")
 CANONICAL_COLUMNS = ("Datetime", *METRICS, "symbol")
-
-CANONICAL_SCHEMA = T.StructType(
-    [
-        T.StructField("Datetime", T.TimestampType()),
-        T.StructField("Open", T.DoubleType()),
-        T.StructField("High", T.DoubleType()),
-        T.StructField("Low", T.DoubleType()),
-        T.StructField("Close", T.DoubleType()),
-        T.StructField("Volume", T.LongType()),
-        T.StructField("symbol", T.StringType()),
-    ]
-)
 
 PREDICTION_SCHEMA = T.StructType(
     [
@@ -73,11 +61,12 @@ def _parse_timestamp(col: Column) -> Column:
     )
 
 
-def normalize_schema(df: DataFrame, symbol: str | None = None) -> DataFrame:
+def normalize_schema(df: DataFrame) -> DataFrame:
     """Fuzzy-resolve a raw ingest frame to the canonical OHLCV schema.
 
     Pure column-metadata logic on the driver; emits a single select —
-    one narrow projection in the plan, no shuffle.
+    one narrow projection in the plan, no shuffle. ``df`` may union many
+    symbols' suffixed columns, each null outside its own symbol's rows.
     """
     cols = list(df.columns)
     dtypes = dict(df.dtypes)
@@ -92,15 +81,15 @@ def normalize_schema(df: DataFrame, symbol: str | None = None) -> DataFrame:
             c = c.cast("timestamp")
         exprs.append(c.alias("Datetime"))
 
-    # Last match wins, as in transform.py:53-55's dict overwrite.
+    # Last match wins, as in transform.py:53-55's dict overwrite: the
+    # coalesce over the matches in reverse column order is the last
+    # non-null one on each row.
     for metric in METRICS:
-        match = None
-        for c in cols:
-            if metric.lower() in c.lower():
-                match = c
-        if match is not None:
+        matches = [c for c in cols if metric.lower() in c.lower()]
+        if matches:
             target = "long" if metric == "Volume" else "double"
-            exprs.append(F.col(match).cast(target).alias(metric))
+            resolved = F.coalesce(*[F.col(c).cast(target) for c in reversed(matches)])
+            exprs.append(resolved.alias(metric))
 
     symbol_col = None
     for c in cols:
@@ -108,7 +97,5 @@ def normalize_schema(df: DataFrame, symbol: str | None = None) -> DataFrame:
             symbol_col = c
     if symbol_col is not None:
         exprs.append(F.col(symbol_col).cast("string").alias("symbol"))
-    elif symbol is not None:
-        exprs.append(F.lit(symbol).alias("symbol"))
 
     return df.select(*exprs)

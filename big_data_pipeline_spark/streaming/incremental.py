@@ -10,34 +10,22 @@ runs (drain everything new, then stop) that a daily scheduler can
 invoke exactly like the reference's DAG, with the checkpoint replacing
 the truncate.
 
-``foreachBatch`` bridges to the batch IO layer so the processed lake
-keeps the identical layout (symbol-partitioned parquet) whether it was
-written by the batch or the incremental path.
+It streams the raw layer ``pipeline.ingest`` writes (JSONL under
+``raw/symbol=<s>/``, suffixed columns such as ``Close_AAPL``) through
+the batch ``transform``'s ``normalize_schema``. ``foreachBatch`` bridges
+to the batch IO layer so the processed lake keeps the identical layout
+(symbol-partitioned parquet) whether it was written by the batch or the
+incremental path.
 """
 
 from __future__ import annotations
 
-import os
-
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
+from big_data_pipeline_spark.io import read_symbol_partitioned
 from big_data_pipeline_spark.schema import normalize_schema
-
-# Raw-layer JSONL schema in the *canonical-ingest* shape the ticker
-# source emits (streams need explicit schemas).
-RAW_SCHEMA = T.StructType(
-    [
-        T.StructField("Datetime", T.StringType()),
-        T.StructField("Open", T.DoubleType()),
-        T.StructField("High", T.DoubleType()),
-        T.StructField("Low", T.DoubleType()),
-        T.StructField("Close", T.DoubleType()),
-        T.StructField("Volume", T.LongType()),
-        T.StructField("symbol", T.StringType()),
-    ]
-)
 
 
 def incremental_transform(
@@ -58,13 +46,17 @@ def incremental_transform(
     alone is at-least-once; a blind append would double rows on
     retry). Readers see ``ingest_batch`` as an ordinary partition
     column and can ignore it.
+
+    The stream's schema comes from a batch read of all of ``raw_dir`` on
+    every drain, so a symbol first arriving between drains is picked up.
     """
-    raw = (
-        spark.readStream.schema(RAW_SCHEMA)
-        .option("multiLine", "false")
-        .json(os.path.join(raw_dir, "*"))
-    )
-    normalized = normalize_schema(raw)
+    try:
+        schema = read_symbol_partitioned(spark, raw_dir, "json").schema
+    except AnalysisException as e:
+        if e.getCondition() in ("UNABLE_TO_INFER_SCHEMA", "PATH_NOT_FOUND"):
+            return 0
+        raise
+    normalized = normalize_schema(spark.readStream.schema(schema).json(raw_dir))
 
     n_batches = 0
 
