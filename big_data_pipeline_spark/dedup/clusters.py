@@ -5,7 +5,7 @@ dedup DECISION needs components — every document in a cluster except
 one representative gets dropped. ``connected_components`` is the one
 operator for it, with one count-first gate:
 
-- at or below ``operators.graph.DRIVER_MAX_EDGES`` pairs (aggregated
+- at or below ``DRIVER_MAX_EDGES`` pairs (aggregated
   entity graphs, near-dup pair sets, DBSCAN cell graphs) the pairs are
   collected once and solved in numpy on the driver (``_cc_driver``);
 - above it, the large-star/small-star loop (Kiveris et al., "Connected
@@ -23,7 +23,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from big_data_pipeline_spark.operators import graph as _graph
+
+# The one driver-solve gate: edge sets at or below it are collected
+# once and solved in numpy. Aggregated entity graphs are
+# key-cardinality-bounded, and iterating a driver-small graph through
+# cluster rounds spends everything on scheduling (measured: 8 star
+# rounds ≈ 3-5 s at sf0.1 vs <1 s collected). Read at call time, so
+# tests force the star loop by patching it to 0.
+DRIVER_MAX_EDGES = 2_000_000
 
 
 def _cc_driver(pairs_df: DataFrame, id_type) -> DataFrame:
@@ -229,6 +236,6 @@ def connected_components(
     raw = edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b")
     ).localCheckpoint(eager=False)
-    if raw.count() <= _graph.DRIVER_MAX_EDGES:
+    if raw.count() <= DRIVER_MAX_EDGES:
         return _cc_driver(raw, raw.schema["a"].dataType)
     return _cc_star(raw)

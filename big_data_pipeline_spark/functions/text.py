@@ -141,19 +141,3 @@ def md5_fingerprint(col: str | Column) -> Column:
     """Exact-dedup content fingerprint (hex md5, engine-portable)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.md5(c)
-
-
-def rolling_fingerprint(tokens: Column, base: int = 1_000_003) -> Column:
-    """Order-sensitive polynomial rolling hash over token hashes.
-
-    ``fp = fold(tokens, 0, (acc, t) -> acc * base + xxhash64(t))`` in
-    64-bit wraparound arithmetic. Distinguishes documents with the same
-    token multiset in different order (md5 of raw text can't survive
-    whitespace normalization; this does). Spark-only (xxhash64), so it
-    gets a rows-only driver check + pytest determinism tests.
-    """
-    return F.aggregate(
-        tokens,
-        F.lit(0).cast("long"),
-        lambda acc, t: acc * F.lit(base).cast("long") + F.xxhash64(t),
-    )

@@ -98,30 +98,6 @@ def _hyperplanes(n_tables: int, bits: int, dims: int, seed: int) -> list[list[li
     ]
 
 
-def _signature(vec: Column, planes: list[list[float]]) -> Column:
-    """r-bit sign signature of projections onto the given hyperplanes.
-
-    Expression form (higher-order functions) — kept for reference and
-    tiny inputs; the hot path uses the vectorized ``_signatures_udf``
-    (one numpy matmul per Arrow batch, ~100x the interpreted lambda)."""
-    bits = []
-    for i, plane in enumerate(planes):
-        proj = F.aggregate(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(w) for w in plane]),
-                lambda x, w: x.cast("double") * w,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(proj >= 0, F.lit(1 << i)).otherwise(F.lit(0)))
-    sig = bits[0]
-    for b in bits[1:]:
-        sig = sig + b
-    return sig
-
-
 def _signatures_udf(planes: list[list[list[float]]]):
     """Vectorized all-tables signature: embeddings batch (n, d) @
     stacked planes (d, tables*bits) in one BLAS call, then bit-pack the

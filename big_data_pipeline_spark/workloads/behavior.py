@@ -555,7 +555,7 @@ FROM ranked, n
 # window + one map-side-combinable groupBy; the chain itself is
 # |event_types|²-bounded REGARDLESS of input size, so the value
 # iteration driver-solves on a ≤ 64-row matrix (the pagerank
-# driver-small pattern, operators/graph.py:29).
+# driver-small pattern, workloads/graph_rank._pagerank_driver).
 
 _MRA_ITERS = 20
 _MRA_ROUND = 8

@@ -1343,17 +1343,6 @@ def _pois_cdf() -> tuple[float, ...]:
 _POIS_CDF = _pois_cdf()
 
 
-def _hex48_fold(h: str) -> str:
-    """48-bit integer from the first 12 hex digits of md5 text ``h`` —
-    same fold as the table checksums."""
-    parts = [
-        f"CAST(instr('{_HEX_DIGITS}', substr({h}, {i + 1}, 1)) - 1"
-        f" AS BIGINT) * {16 ** (11 - i)}"
-        for i in range(12)
-    ]
-    return "(" + " + ".join(parts) + ")"
-
-
 def _boot_h_expr(j: int, cast_type: str) -> str:
     return f"md5(CAST(o_orderkey AS {cast_type}) || ':{j}')"
 

@@ -12,11 +12,11 @@ p=0 self-loop per node so every node has an in-edge. One recursive-CTE
 step per iteration then references the rank table exactly once
 (window-SUM + DISTINCT, same device as the k-core oracle below), and
 the unrolled 10-iteration CTE reproduces the exact formula of
-``operators/graph._pagerank_driver``. Both engines accumulate float64
-in different orders, but the ≤|nations| term sums drift ~1e-15 while
-the output is rounded to 8 decimals — the hash check compares the
-rounded grain. A numpy power-iteration golden (tests/test_graph.py)
-independently pins the math.
+``_pagerank_driver``. Both engines accumulate float64 in different
+orders, but the ≤|nations| term sums drift ~1e-15 while the output
+is rounded to 8 decimals — the hash check compares the rounded grain.
+A numpy power-iteration golden (tests/test_graph.py) independently
+pins the math.
 """
 
 from __future__ import annotations
@@ -27,7 +27,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from big_data_pipeline_spark.io import read_table
-from big_data_pipeline_spark.operators.graph import pagerank
 from big_data_pipeline_spark.oracle import exact_avg, exact_sum
 
 
@@ -56,15 +55,17 @@ def trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- driver-solved trade-graph queries --------------------------------------
-# bfs, sssp, closeness, k-core and LPA iterate over the thresholded trade
-# graph, which has one edge per (supplier nation, customer nation) pair.
-# `nation` is a fixed 25-row dimension (`tools/gen_sf.py` copies its
-# FIXED tables unchanged at every scale), so the graph has at most
-# 25² = 625 edges at any corpus size. Each query therefore runs one
-# Spark pass that builds the edge list, collects it, and iterates in
-# numpy. Each solver runs synchronous rounds under its recursive-CTE
-# oracle's round cap and stops early only at a fixpoint, so the rows
-# agree even when the cap stops short of convergence.
+# pagerank, triangle count, bfs, sssp, closeness, k-core and LPA solve
+# over the trade graph, which has one edge per (supplier nation,
+# customer nation) pair: pagerank over `trade_edges` itself, the other
+# six over its `_strong_edges` threshold. `nation` is a fixed 25-row
+# dimension (`tools/gen_sf.py` copies its FIXED tables unchanged at
+# every scale), so the graph has at most 25² = 625 edges at any corpus
+# size. Each query therefore runs one Spark pass that builds the edge
+# list, collects it, and solves in numpy. The iterative solvers run
+# synchronous rounds under their recursive-CTE oracle's round cap and
+# stop early only at a fixpoint, so the rows agree even when the cap
+# stops short of convergence.
 
 
 def _strong_edges(spark: SparkSession, sf_dir: str, factor: float):
@@ -238,71 +239,68 @@ def _closeness_driver(pdf, max_hops: int) -> list[tuple]:
     )
 
 
+def _pagerank_driver(pdf, damping: float, iters: int) -> list[tuple]:
+    """Weighted power iteration over (src, dst, weight) edges: each
+    weight is divided by its source's total out-weight, dangling mass
+    spreads uniformly, and edges accumulate in (dst, src) order so runs
+    repeat exactly. Returns (node, rank) rows; ranks sum to 1."""
+    import numpy as np
+
+    if pdf.empty:
+        return []
+    ids, src, dst = _node_index(pdf)
+    n = len(ids)
+    w = pdf.iloc[:, 2].to_numpy().astype(np.float64)
+    p = w / np.bincount(src, weights=w, minlength=n)[src]
+    order = np.lexsort((src, dst))
+    src, dst, p = src[order], dst[order], p[order]
+    has_out = np.zeros(n, dtype=bool)
+    has_out[src] = True
+    rank = np.full(n, 1.0 / n)
+    for _ in range(iters):
+        dangling = float(rank[~has_out].sum())
+        contrib = np.zeros(n)
+        np.add.at(contrib, dst, p * rank[src])
+        rank = (1.0 - damping) / n + damping * dangling / n + damping * contrib
+    return list(zip(ids.tolist(), rank.tolist()))
+
+
 def pagerank_nation_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = trade_edges(spark, sf_dir)
-    ranks = pagerank(edges, damping=0.85, max_iter=10, weight="revenue")
-    return (
-        ranks.select(
-            F.col("id").alias("nation"), F.round("rank", 8).alias("rank")
-        )
-        .orderBy(F.desc("rank"), "nation")
+    pdf = trade_edges(spark, sf_dir).toPandas()
+    ranks = spark.createDataFrame(
+        _pagerank_driver(pdf, 0.85, 10), "nation string, rank double"
+    )
+    return ranks.select("nation", F.round("rank", 8).alias("rank")).orderBy(
+        F.desc("rank"), "nation"
     )
 
 
-# --- triangle_count_trade: multi-way self-join graph motif ------------------
-# Triangle counting = the canonical graph-motif join: canonicalize the
-# strong-trade graph to undirected a<b edges, then one two-hop join
-# closed by a third edge check, with a<b<c ordering so each triangle
-# counts exactly once. Edge threshold is RELATIVE (1.8× the mean edge
-# revenue) so the query is scale-free across sf. Per-nation output =
-# explode each triangle's three corners.
-#
-# Scale: |edges| after thresholding is per-nation-pair aggregated —
-# graph size is bounded by key cardinality squared, never row count;
-# the joins are edge-sized, and the a<b<c ordering halves/serializes
-# the candidate space exactly as in the MapReduce triangle literature.
+# --- triangle_count_trade: graph motif count ---------------------------------
+# Triangle counting over the strong-trade graph (edge threshold RELATIVE,
+# 1.8× the mean edge revenue, so the query is scale-free across sf).
+# With the symmetric 0/1 adjacency A, diag(A³)_i counts the closed
+# 3-step walks i→j→k→i, each triangle at i twice (once per direction), so
+# diag(A³) / 2 is the number of triangles at each node.
+
+
+def _triangle_driver(pdf) -> list[tuple]:
+    """Per-node triangle counts over a symmetric (a, b) edge frame;
+    nodes on no triangle are omitted."""
+    import numpy as np
+
+    ids, u, v = _node_index(pdf)
+    adj = np.zeros((len(ids), len(ids)), dtype=np.int64)
+    adj[u, v] = 1
+    tri = ((adj @ adj) * adj).sum(axis=1) // 2
+    on = np.flatnonzero(tri)
+    return list(zip(ids[on].tolist(), tri[on].tolist()))
 
 
 def triangle_count_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # key-bounded frame consumed by the avg scalar AND the threshold
-    # probe below — one corpus pass instead of a replay per consumer
-    edges = trade_edges(spark, sf_dir).localCheckpoint(eager=False)
-    # exact decimal avg: a raw double AVG is partial-agg-order sensitive
-    # and the threshold compare must be deterministic on both engines
-    avg_rev = edges.agg(exact_avg("revenue", "avg_rev"))
-    strong = (
-        edges.crossJoin(F.broadcast(avg_rev))
-        .filter(F.col("revenue") > 1.8 * F.col("avg_rev"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        # strong is consumed 3× (e1/e2/e3); without a lineage cut the
-        # upstream 5-way join + agg replays per consumer unless exchange
-        # reuse happens to rescue it. Materialize once — the thresholded
-        # edge list is key-cardinality-bounded (≤ |nations|²), so this
-        # is a tiny cached table even at 100 TB input. Same pattern as
-        # pagerank/star-CC (commit 495263f).
-        .localCheckpoint(eager=True)
-    )
-    e1 = strong.select(F.col("a").alias("x"), F.col("b").alias("y"))
-    e2 = strong.select(F.col("a").alias("y"), F.col("b").alias("z"))
-    e3 = strong.select(F.col("a").alias("x"), F.col("b").alias("z"))
-    # triangles also feeds 3 corner projections; it's triangle-count
-    # sized (tiny), so cut lineage here too.
-    triangles = e1.join(e2, "y").join(e3, ["x", "z"]).localCheckpoint(eager=True)
-    corners = (
-        triangles.select(F.col("x").alias("nation"))
-        .unionAll(triangles.select(F.col("y").alias("nation")))
-        .unionAll(triangles.select(F.col("z").alias("nation")))
-    )
-    return (
-        corners.groupBy("nation")
-        .agg(F.count(F.lit(1)).alias("n_triangles"))
-        .orderBy(F.desc("n_triangles"), "nation")
-    )
+    pdf = _strong_edges(spark, sf_dir, 1.8)
+    return spark.createDataFrame(
+        _triangle_driver(pdf), "nation string, n_triangles long"
+    ).orderBy(F.desc("n_triangles"), "nation")
 
 
 _TRIANGLE_SQL = """
@@ -428,7 +426,7 @@ ORDER BY kcore_degree DESC, nation
 
 
 # PageRank oracle: see module docstring. Iteration count / damping are
-# pinned to pagerank_nation_trade's call (max_iter=10, damping=0.85);
+# pinned to pagerank_nation_trade's call (iters=10, damping=0.85);
 # `aug` is the augmented transition list (real normalized edges +
 # dangling→all 1/n edges + p=0 self-loops).
 _PAGERANK_SQL = """
@@ -783,8 +781,7 @@ def degree_assortativity_trade(
         # sym (twice), deg and the moment join — without the cut the
         # 5-way join + aggregate pipeline replays per consumer (the
         # before-plan held 144 parquet scans). Key-cardinality-bounded
-        # (≤ |nations|²), so a tiny cached table at any input size —
-        # same device as triangle_count_trade's `strong`.
+        # (≤ |nations|²), so a tiny cached table at any input size.
         .localCheckpoint(eager=True)
     )
     sym = und.union(

@@ -1234,9 +1234,9 @@ _BPE_ROUNDS = 8
 _BPE_EOW = "</w>"
 # Below this distinct-word count the weighted vocab is collected and
 # the rounds run in-process — the same gated driver-solve as
-# operators/graph.py's PageRank (DRIVER_MAX_EDGES): the vocab is a
-# MODEL (bounded by the language, not the corpus — production BPE
-# trainers hold exactly this word-count table in RAM), so iterating K
+# dedup/clusters.py's connected components (DRIVER_MAX_EDGES): the
+# vocab is a MODEL (bounded by the language, not the corpus — production
+# BPE trainers hold exactly this word-count table in RAM), so iterating K
 # rounds on it locally beats K Spark jobs of pure scheduling overhead
 # (measured 15.8s -> <1s at sf0.001). Above the gate the distributed
 # round loop below computes identical rules.
@@ -1417,8 +1417,8 @@ def bpe_merge_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         seqs = seqs.select("wc", apply_merge("syms").alias("syms"))
         # cut lineage each round — K stacked UDF stages otherwise
-        # re-execute cumulatively (same discipline as the CC/PageRank
-        # loops in operators/graph.py); lazy, see the note above
+        # re-execute cumulatively (same discipline as the star loop in
+        # dedup/clusters.py); lazy, see the note above
         seqs = seqs.localCheckpoint(eager=False)
 
     return spark.createDataFrame(

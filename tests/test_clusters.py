@@ -1,7 +1,7 @@
 """Connected-components clustering on literal graphs.
 
 ``connected_components`` is one operator with one driver gate
-(``operators.graph.DRIVER_MAX_EDGES``): the numpy driver solve at or
+(``clusters.DRIVER_MAX_EDGES``): the numpy driver solve at or
 below it, the large-star/small-star loop above it. The tests call both
 private paths directly on the same graphs and pin them to an expected
 map, so each path is exercised whatever the gate's value.
@@ -56,9 +56,9 @@ def test_connected_components_chain_and_islands(spark):
 def test_connected_components_long_path_converges(spark, monkeypatch):
     # path 0-1-...-9 through the public operator with the gate forced
     # to 0: the edge count routes it to the star loop
-    from big_data_pipeline_spark.operators import graph
+    from big_data_pipeline_spark.dedup import clusters
 
-    monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", 0)
+    monkeypatch.setattr(clusters, "DRIVER_MAX_EDGES", 0)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(9)], "src long, dst long"
     )

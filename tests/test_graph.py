@@ -1,13 +1,15 @@
-"""PageRank golden: the distributed power iteration must match a dense
+"""PageRank golden: the driver power iteration must match a dense
 numpy recomputation on the same (small) graph."""
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import functions as F
+import pandas as pd
 
-from big_data_pipeline_spark.operators.graph import pagerank
-from big_data_pipeline_spark.workloads.graph_rank import trade_edges
+from big_data_pipeline_spark.workloads.graph_rank import (
+    _pagerank_driver,
+    trade_edges,
+)
 
 
 def _numpy_pagerank(edges, damping=0.85, iters=15):
@@ -27,60 +29,32 @@ def _numpy_pagerank(edges, damping=0.85, iters=15):
     return dict(zip(nodes, r))
 
 
+def _edges(rows):
+    return pd.DataFrame(rows, columns=["src", "dst", "revenue"])
+
+
 def test_pagerank_matches_numpy_golden(spark, sf_dir):
-    edges_df = trade_edges(spark, sf_dir)
-    edges = [(r.src, r.dst, r.revenue) for r in edges_df.collect()]
-    want = _numpy_pagerank(edges, iters=10)
-    got = {
-        r.id: r.rank
-        for r in pagerank(edges_df, weight="revenue", max_iter=10).collect()
-    }
+    pdf = trade_edges(spark, sf_dir).toPandas()
+    want = _numpy_pagerank(list(pdf.itertuples(index=False)), iters=10)
+    got = dict(_pagerank_driver(pdf, 0.85, 10))
     assert set(got) == set(want)
     for k in want:
         assert abs(got[k] - want[k]) < 1e-9, k
     assert abs(sum(got.values()) - 1.0) < 1e-6
 
 
-def test_pagerank_dangling_and_uniform_weight(spark):
+def test_pagerank_dangling_and_uniform_weight():
     # chain a->b->c: c is dangling; uniform weights
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c")], ["src", "dst"]
-    )
-    got = {r.id: r.rank for r in pagerank(edges, max_iter=30).collect()}
-    want = _numpy_pagerank([("a", "b", 1.0), ("b", "c", 1.0)], iters=30)
+    chain = [("a", "b", 1.0), ("b", "c", 1.0)]
+    got = dict(_pagerank_driver(_edges(chain), 0.85, 30))
+    want = _numpy_pagerank(chain, iters=30)
     for k in want:
         assert abs(got[k] - want[k]) < 1e-9, k
     assert got["c"] > got["b"] > got["a"]
 
 
-def test_pagerank_empty_edges_returns_empty(spark):
-    empty = spark.createDataFrame([], "src string, dst string")
-    out = pagerank(empty)
-    assert out.count() == 0
-    assert set(out.columns) == {"id", "rank"}
-
-
-def test_driver_and_distributed_paths_agree(spark, monkeypatch):
-    """The small-graph driver solve and the distributed loop must agree
-    to float tolerance on the same graph (association orders differ)."""
-    from big_data_pipeline_spark.operators import graph
-    from big_data_pipeline_spark.operators.graph import pagerank
-
-    edges = spark.createDataFrame(
-        [("a", "b", 2.0), ("b", "c", 1.0), ("c", "a", 3.0),
-         ("a", "c", 1.0), ("d", "a", 1.0)],  # d dangles into a; e none
-        "src string, dst string, weight double",
-    )
-    fast = {r.id: r.rank for r in pagerank(edges, max_iter=8, weight="weight").collect()}
-    monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", 0)
-    slow = {
-        r.id: r.rank
-        for r in pagerank(edges, max_iter=8, weight="weight").collect()
-    }
-    assert set(fast) == set(slow)
-    for k in fast:
-        assert abs(fast[k] - slow[k]) < 1e-12, k
-    assert abs(sum(fast.values()) - 1.0) < 1e-9
+def test_pagerank_empty_edges_returns_empty():
+    assert _pagerank_driver(_edges([]), 0.85, 10) == []
 
 
 def _sym(edges):

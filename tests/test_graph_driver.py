@@ -3,7 +3,7 @@
 Each solver is pinned against hand-derived outputs on crafted graphs
 (including a source absent from the graph, round caps that stop before
 convergence, and the LPA min-label tie-break), and each query against
-its DuckDB recursive-CTE oracle on the small corpus.
+its DuckDB oracle on the small corpus.
 """
 
 from __future__ import annotations
@@ -36,6 +36,8 @@ def _canon(cols, rows):
         "closeness_trade_centrality",
         "lpa_trade_communities",
         "kcore_trade_graph",
+        "pagerank_nation_trade",
+        "triangle_count_trade",
     ],
 )
 def test_graph_query_matches_oracle(spark, sf_dir, name):
@@ -86,6 +88,25 @@ def test_kcore_driver_round_cap_stops_before_fixpoint():
     assert set(two) == {
         (u, v) for i in range(3, 10) for u, v in ((i, i + 1), (i + 1, i))
     }
+
+
+@pytest.mark.parametrize(
+    "edges,want",
+    [
+        # K4: every node closes a triangle with each pair of the others
+        (
+            [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)],
+            [(1, 3), (2, 3), (3, 3), (4, 3)],
+        ),
+        # triangle + tail: the tail nodes 4 and 5 are on no triangle
+        ([(1, 2), (2, 3), (1, 3), (3, 4), (4, 5)], [(1, 1), (2, 1), (3, 1)]),
+        # chain: no triangles, no rows
+        ([(i, i + 1) for i in range(1, 6)], []),
+    ],
+    ids=["k4", "triangle_tail", "chain"],
+)
+def test_triangle_driver_crafted(edges, want):
+    assert sorted(gr._triangle_driver(_sym(edges))) == want
 
 
 # A-B-C-D path with a B-E branch, plus a separate F-G component

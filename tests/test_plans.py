@@ -199,9 +199,9 @@ def test_grouped_ml_single_shuffle_to_pandas(spark, sf_dir):
 
 
 def test_pagerank_serving_plan_tiny(spark, sf_dir):
-    """Key-bounded graph goes through the driver solver (gated by
-    operators.graph.DRIVER_MAX_EDGES); the served result must not carry
-    an iterative exchange chain."""
+    """Key-bounded graph is collected once and solved on the driver
+    (graph_rank._pagerank_driver); the served result must not carry an
+    iterative exchange chain."""
     plan = _plan(spark, sf_dir, "pagerank_nation_trade")
     assert plan.count("Exchange") <= 2
 

@@ -41,9 +41,9 @@ _LINE_NOTIME = re.compile(
 )
 
 
-def parse(log_path: str) -> dict[str, dict]:
+def parse(text: str) -> dict[str, dict]:
+    """Per-query {status, rows, sec[, err]} from check_oracle output."""
     results: dict[str, dict] = {}
-    text = Path(log_path).read_text()
     for line in text.replace("\r", "\n").splitlines():
         line = line.strip()
         m = _LINE_NOTIME.search(line)
@@ -87,7 +87,7 @@ def main() -> int:
     problems: list[str] = []
     for spec in specs:
         sf, log = spec.split("=", 1)
-        res = parse(log)
+        res = parse(Path(log).read_text())
         missing = [q for q in registry if q not in res]
         counts = {"n_ok": 0, "n_weak": 0, "n_fail": 0}
         for r in res.values():

@@ -10,12 +10,34 @@ Usage: python tools/spot_sweep.py OUT.json "artifact description" \
 from __future__ import annotations
 
 import json
-import re
 import subprocess
 import sys
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
+
+import __spark_entry__ as entrymod  # noqa: E402
+from tools.assemble_sweep import parse  # noqa: E402
+
+
+def sweep_artifact(
+    desc: str, sf_dir: str, queries: list[str], log: str
+) -> dict:
+    """The artifact for one check_oracle run's output ``log``."""
+    results = parse(log)
+    # registry_size is read from the live registry, never typed by
+    # hand: BENCH/SWEEP/README counts drifted in past rounds precisely
+    # because artifacts carried constants (VERDICT r6 item 7).
+    return {
+        "artifact": desc,
+        "sf_dir": sf_dir,
+        "registry_size": len(entrymod.queries()),
+        "n_queries": len(queries),
+        "n_failures": sum(r["status"] == "FAIL" for r in results.values()),
+        "missing": [q for q in queries if q not in results],
+        "results": results,
+    }
 
 
 def main() -> int:
@@ -25,41 +47,10 @@ def main() -> int:
         capture_output=True,
         text=True,
     )
-    results: dict[str, dict] = {}
-    n_fail = 0
-    for line in (proc.stdout + proc.stderr).replace("\r", "\n").splitlines():
-        m = re.match(
-            r"(ok|FAIL|weak)\s+(\S+?):.*?(?:rows=(\d+))?\s*\(([0-9.]+)s\)",
-            line.strip(),
-        )
-        if not m:
-            continue
-        status, name, rows, sec = m.groups()
-        results[name] = {
-            "status": status,
-            "rows": int(rows) if rows else None,
-            "sec": float(sec),
-        }
-        if status == "FAIL":
-            n_fail += 1
-    missing = [q for q in queries if q not in results]
-    # registry_size is read from the live registry, never typed by
-    # hand: BENCH/SWEEP/README counts drifted in past rounds precisely
-    # because artifacts carried constants (VERDICT r6 item 7).
-    sys.path.insert(0, str(REPO))
-    import __spark_entry__ as entrymod
-
-    artifact = {
-        "artifact": desc,
-        "sf_dir": sf_dir,
-        "registry_size": len(entrymod.queries()),
-        "n_queries": len(queries),
-        "n_failures": n_fail,
-        "missing": missing,
-        "results": results,
-    }
+    artifact = sweep_artifact(desc, sf_dir, queries, proc.stdout + proc.stderr)
     Path(out_path).write_text(json.dumps(artifact, indent=1))
-    print(f"{out_path}: {len(results)} checked, {n_fail} failures, "
+    n_fail, missing = artifact["n_failures"], artifact["missing"]
+    print(f"{out_path}: {len(artifact['results'])} checked, {n_fail} failures, "
           f"{len(missing)} missing")
     return 1 if (n_fail or missing) else 0
 
