@@ -9,6 +9,7 @@ the latest-file-per-key selection (``transform.py:11-24``,
 
 from __future__ import annotations
 
+import json
 import os
 from pathlib import Path
 
@@ -101,16 +102,86 @@ def read_json_records(
     return reader.json(path)
 
 
+# Key under which Spark's parquet writer stores the row schema as JSON.
+_SPARK_ROW_METADATA = "org.apache.spark.sql.parquet.row.metadata"
+
+
+def _as_nullable(dt):
+    """A data type's JSON with every field and element nullable, as a
+    file-source read exposes it (Spark's ``asNullable``)."""
+    if not isinstance(dt, dict):
+        return dt  # an atomic type's name
+    if dt["type"] == "struct":
+        return {**dt, "fields": [
+            {**f, "nullable": True, "type": _as_nullable(f["type"])} for f in dt["fields"]]}
+    if dt["type"] == "array":
+        return {**dt, "containsNull": True, "elementType": _as_nullable(dt["elementType"])}
+    if dt["type"] == "map":
+        return {**dt, "valueContainsNull": True, "keyType": _as_nullable(dt["keyType"]),
+                "valueType": _as_nullable(dt["valueType"])}
+    return dt
+
+
+def _first_data_file(fs, path):
+    """Depth-first first file under ``path`` that Spark reads as data:
+    no component starting with ``_`` or ``.`` (``_SUCCESS``, ``.crc``,
+    ``_temporary/``)."""
+    for st in fs.listStatus(path):
+        if st.getPath().getName().startswith(("_", ".")):
+            continue
+        if not st.isDirectory():
+            return st.getPath()
+        found = _first_data_file(fs, st.getPath())
+        if found is not None:
+            return found
+    return None
+
+
+def parquet_footer_schema(spark: SparkSession, path: str) -> T.StructType:
+    """Data schema of a Spark-written parquet layer, read from the footer
+    of its first data file: no inference job. Partition columns are not
+    in it, as they are not in the files.
+
+    Goes through the session's Hadoop ``FileSystem`` and parquet-hadoop,
+    so an ``s3a://`` lake works as a local one. Every file of one Spark
+    write carries the same schema under ``_SPARK_ROW_METADATA``. A
+    missing or empty layer raises what Spark's reader raises for it:
+    ``AnalysisException`` ``PATH_NOT_FOUND`` or ``UNABLE_TO_INFER_SCHEMA``.
+    """
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(conf)
+    data_file = _first_data_file(fs, root) if fs.exists(root) else None
+    if data_file is None:
+        return spark.read.parquet(path).schema  # raises; no files, no job
+    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(data_file, conf))
+    try:
+        meta = reader.getFooter().getFileMetaData().getKeyValueMetaData()
+        row_schema = meta.get(_SPARK_ROW_METADATA)
+    finally:
+        reader.close()
+    if row_schema is None:
+        raise ValueError(f"{data_file.toString()} has no Spark schema in its footer")
+    return T.StructType.fromJson(_as_nullable(json.loads(row_schema)))
+
+
 def read_symbol_partitioned(spark: SparkSession, path: str, fmt: str) -> DataFrame:
     """Scan a ``symbol=<s>/``-partitioned lake layer in format ``fmt``
     with ``symbol`` kept a string: partition type inference reads
-    ``symbol=0700`` as 700, so the inferred schema is read again with
-    ``symbol`` retyped (that read infers nothing). The session-wide
-    ``partitionColumnTypeInference`` switch would retype every read."""
-    # The format's own method, not format().load: the inference job keeps
-    # the "<fmt> at" name perfbench counts as io.schema_inference_jobs.
-    inferred = getattr(spark.read, fmt)(path).schema
-    schema = T.StructType([f for f in inferred if f.name != "symbol"]).add("symbol", "string")
+    ``symbol=0700`` as 700, so the layer is read with a schema that
+    types ``symbol`` (that read infers nothing). The session-wide
+    ``partitionColumnTypeInference`` switch would retype every read.
+    Parquet data columns come from a file footer; JSON files carry no
+    schema, so theirs are inferred (one job)."""
+    if fmt == "parquet":
+        data = parquet_footer_schema(spark, path)
+    else:
+        # The format's own method, not format().load: the inference job keeps
+        # the "<fmt> at" name perfbench counts as io.schema_inference_jobs.
+        data = getattr(spark.read, fmt)(path).schema
+    schema = T.StructType([f for f in data if f.name != "symbol"]).add("symbol", "string")
     return getattr(spark.read.schema(schema), fmt)(path)
 
 

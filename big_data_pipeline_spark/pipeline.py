@@ -36,7 +36,11 @@ import pandas as pd
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
-from big_data_pipeline_spark.io import read_symbol_partitioned, write_parquet
+from big_data_pipeline_spark.io import (
+    parquet_footer_schema,
+    read_symbol_partitioned,
+    write_parquet,
+)
 from big_data_pipeline_spark.ml.linreg import predict_next_close
 from big_data_pipeline_spark.schema import normalize_schema
 
@@ -138,7 +142,8 @@ def combine(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
 
 def predict(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
     """Stage 4 (A3): per-symbol next-close OLS → predictions/."""
-    bars = spark.read.parquet(cfg.layer("combined"))
+    combined = cfg.layer("combined")
+    bars = spark.read.schema(parquet_footer_schema(spark, combined)).parquet(combined)
     preds = predict_next_close(bars)
     write_parquet(preds, cfg.layer("predictions"))
     return preds

@@ -21,8 +21,7 @@ first and fall back, keeping real data instead of nulls.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 METRICS = ("Open", "High", "Low", "Close", "Volume")
@@ -50,36 +49,42 @@ def find_datetime_column(columns: list[str]) -> str | None:
     return None
 
 
-def _parse_timestamp(col: Column) -> Column:
+def _quote(name: str) -> str:
+    """A column name as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _parse_timestamp(col: str) -> str:
     """Offset-aware first (`2025-11-05 09:30:00-05:00`), then naive.
     ``try_to_timestamp`` nulls on failure (Spark 4 is ANSI by default, so
     plain ``to_timestamp`` would throw), matching Polars strict=False."""
-    return F.coalesce(
-        F.try_to_timestamp(col, F.lit("yyyy-MM-dd HH:mm:ssXXX")),
-        F.try_to_timestamp(col, F.lit("yyyy-MM-dd HH:mm:ss")),
-        col.try_cast("timestamp"),
+    return (
+        f"coalesce(try_to_timestamp({col}, 'yyyy-MM-dd HH:mm:ssXXX'), "
+        f"try_to_timestamp({col}, 'yyyy-MM-dd HH:mm:ss'), try_cast({col} AS timestamp))"
     )
 
 
 def normalize_schema(df: DataFrame) -> DataFrame:
     """Fuzzy-resolve a raw ingest frame to the canonical OHLCV schema.
 
-    Pure column-metadata logic on the driver; emits a single select —
-    one narrow projection in the plan, no shuffle. ``df`` may union many
+    Pure column-metadata logic on the driver; emits a single projection
+    — one narrow node in the plan, no shuffle. ``df`` may union many
     symbols' suffixed columns, each null outside its own symbol's rows.
+    The projection is SQL text parsed once by ``selectExpr``: building
+    the same ~60 expressions as Column objects costs a py4j call each.
     """
     cols = list(df.columns)
     dtypes = dict(df.dtypes)
-    exprs: list[Column] = []
+    exprs: list[str] = []
 
     dt_col = find_datetime_column(cols)
     if dt_col is not None:
-        c = F.col(dt_col)
+        c = _quote(dt_col)
         if dtypes[dt_col] == "string":
             c = _parse_timestamp(c)
         else:
-            c = c.cast("timestamp")
-        exprs.append(c.alias("Datetime"))
+            c = f"CAST({c} AS timestamp)"
+        exprs.append(f"{c} AS Datetime")
 
     # Last match wins, as in transform.py:53-55's dict overwrite: the
     # coalesce over the matches in reverse column order is the last
@@ -87,15 +92,15 @@ def normalize_schema(df: DataFrame) -> DataFrame:
     for metric in METRICS:
         matches = [c for c in cols if metric.lower() in c.lower()]
         if matches:
-            target = "long" if metric == "Volume" else "double"
-            resolved = F.coalesce(*[F.col(c).cast(target) for c in reversed(matches)])
-            exprs.append(resolved.alias(metric))
+            target = "bigint" if metric == "Volume" else "double"
+            casts = ", ".join(f"CAST({_quote(c)} AS {target})" for c in reversed(matches))
+            exprs.append(f"coalesce({casts}) AS {metric}")
 
     symbol_col = None
     for c in cols:
         if c.lower() == "symbol":
             symbol_col = c
     if symbol_col is not None:
-        exprs.append(F.col(symbol_col).cast("string").alias("symbol"))
+        exprs.append(f"CAST({_quote(symbol_col)} AS string) AS symbol")
 
-    return df.select(*exprs)
+    return df.selectExpr(*exprs)

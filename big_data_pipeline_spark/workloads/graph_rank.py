@@ -22,6 +22,7 @@ pins the math.
 from __future__ import annotations
 
 from collections import Counter
+from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -265,14 +266,25 @@ def _pagerank_driver(pdf, damping: float, iters: int) -> list[tuple]:
     return list(zip(ids.tolist(), rank.tolist()))
 
 
+def _value_desc(rows: list[tuple], key=lambda v: v) -> list[tuple]:
+    """(nation, value) rows by ``key(value)`` descending, then nation.
+
+    Driver-solved queries serve their rows in this order, sorted here
+    because a Spark ``orderBy`` over at most 25 driver-built rows pays
+    range-partition sampling jobs on every execution."""
+    return sorted(rows, key=lambda r: (-key(r[1]), r[0]))
+
+
+def _round_half_up(x: float, places: int) -> Decimal:
+    """``F.round(x, places)`` on a double: HALF_UP on its shortest decimal."""
+    return Decimal(repr(x)).quantize(Decimal(1).scaleb(-places), ROUND_HALF_UP)
+
+
 def pagerank_nation_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     pdf = trade_edges(spark, sf_dir).toPandas()
-    ranks = spark.createDataFrame(
-        _pagerank_driver(pdf, 0.85, 10), "nation string, rank double"
-    )
-    return ranks.select("nation", F.round("rank", 8).alias("rank")).orderBy(
-        F.desc("rank"), "nation"
-    )
+    ranks = _value_desc(_pagerank_driver(pdf, 0.85, 10), lambda r: _round_half_up(r, 8))
+    return spark.createDataFrame(ranks, "nation string, rank double").select(
+        "nation", F.round("rank", 8).alias("rank"))
 
 
 # --- triangle_count_trade: graph motif count ---------------------------------
@@ -299,8 +311,7 @@ def _triangle_driver(pdf) -> list[tuple]:
 def triangle_count_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     pdf = _strong_edges(spark, sf_dir, 1.8)
     return spark.createDataFrame(
-        _triangle_driver(pdf), "nation string, n_triangles long"
-    ).orderBy(F.desc("n_triangles"), "nation")
+        _value_desc(_triangle_driver(pdf)), "nation string, n_triangles long")
 
 
 _TRIANGLE_SQL = """
@@ -363,15 +374,14 @@ _KCORE_ROUNDS = 30  # >= max peel depth for a <=25-node nation graph
 
 
 def kcore_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import numpy as np
+
     pdf = _strong_edges(spark, sf_dir, 1.0)
-    sym = spark.createDataFrame(
-        _kcore_driver(pdf, _KCORE_K, _KCORE_ROUNDS), "nation string, v string"
-    )
-    return (
-        sym.groupBy("nation")
-        .agg(F.count(F.lit(1)).alias("kcore_degree"))
-        .orderBy(F.desc("kcore_degree"), "nation")
-    )
+    surviving = _kcore_driver(pdf, _KCORE_K, _KCORE_ROUNDS)
+    nations, degree = np.unique([u for u, _ in surviving], return_counts=True)
+    return spark.createDataFrame(
+        _value_desc(list(zip(nations.tolist(), degree.tolist()))),
+        "nation string, kcore_degree long")
 
 
 _KCORE_SQL = f"""

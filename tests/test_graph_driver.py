@@ -11,6 +11,7 @@ from __future__ import annotations
 import duckdb
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
 import big_data_pipeline_spark.workloads.graph_rank as gr
@@ -42,15 +43,36 @@ def _canon(cols, rows):
 )
 def test_graph_query_matches_oracle(spark, sf_dir, name):
     df = getattr(gr, name)(spark, sf_dir)
+    assert _canon(df.columns, df.collect()) == _canon(*_oracle(sf_dir, name))
+
+
+def _oracle(sf_dir, name):
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
     rel = con.sql(entrymod.oracle_sql()[name])
-    assert _canon(df.columns, df.collect()) == _canon(
-        rel.columns, rel.fetchall()
-    )
+    return rel.columns, rel.fetchall()
+
+
+@pytest.mark.parametrize(
+    "name", ["kcore_trade_graph", "pagerank_nation_trade", "triangle_count_trade"])
+def test_ordered_graph_query_serves_oracle_order_without_a_sort(spark, sf_dir, name):
+    # Rows are ordered on the driver: the served plan sorts nothing.
+    df = getattr(gr, name)(spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Sort" not in plan and "Exchange" not in plan
+    assert (df.columns, [tuple(r) for r in df.collect()]) == _oracle(sf_dir, name)
+
+
+def test_value_desc_breaks_rounded_ties_by_nation(spark):
+    # Both round HALF_UP to 0.12345679, as F.round does, so A precedes B.
+    rows = [("B", 0.12345679), ("A", 0.123456785), ("C", 0.5)]
+    ordered = gr._value_desc(rows, lambda r: gr._round_half_up(r, 8))
+    assert [n for n, _ in ordered] == ["C", "A", "B"]
+    assert spark.createDataFrame(rows[1:2], "nation string, rank double").select(
+        F.round("rank", 8)).first()[0] == 0.12345679
 
 
 _TRIANGLE = {(1, 2), (2, 1), (2, 3), (3, 2), (1, 3), (3, 1)}

@@ -5,12 +5,19 @@ from __future__ import annotations
 import os
 import time
 
+import pytest
+from pyspark.errors import AnalysisException
+from pyspark.sql import types as T
+
 from big_data_pipeline_spark.io import (
     TABLES,
     latest_snapshot,
+    parquet_footer_schema,
+    read_symbol_partitioned,
     read_table,
     write_parquet,
 )
+from big_data_pipeline_spark.pipeline import PipelineConfig, combine, ingest, transform
 
 
 def test_read_all_tables(spark, sf_dir):
@@ -499,3 +506,32 @@ def test_vacuum_drops_dead_orphans_and_rejects_keep_zero(
     assert vacuum_versions(path, keep=2) == [2]
     assert read_versioned(spark, path, 1).count() == nation.count()
     assert read_versioned(spark, path).count() == 1
+
+
+def test_footer_schema_equals_inferred_schema(spark, tmp_path):
+    # Numeric-looking symbols: inference types the partition column int,
+    # which is why read_symbol_partitioned declares it a string.
+    cfg = PipelineConfig(base_dir=str(tmp_path), symbols=("0700", "0005"), periods=6)
+    for stage in (ingest, transform, combine):
+        stage(spark, cfg)
+    processed, combined = cfg.layer("processed"), cfg.layer("combined")
+    inferred = spark.read.parquet(processed).schema
+    assert inferred["symbol"].dataType == T.IntegerType()
+    data = T.StructType([f for f in inferred if f.name != "symbol"])
+    assert parquet_footer_schema(spark, processed) == data
+    assert parquet_footer_schema(spark, combined) == spark.read.parquet(combined).schema
+    read = read_symbol_partitioned(spark, processed, "parquet")
+    assert read.schema == data.add("symbol", "string")
+    assert sorted({r.symbol for r in read.collect()}) == ["0005", "0700"]
+
+
+def test_footer_schema_of_missing_or_empty_layer_raises(spark, tmp_path):
+    with pytest.raises(AnalysisException) as missing:
+        parquet_footer_schema(spark, str(tmp_path / "absent"))
+    assert missing.value.getCondition() == "PATH_NOT_FOUND"
+    empty = tmp_path / "empty"
+    (empty / "symbol=A").mkdir(parents=True)
+    (empty / "_SUCCESS").touch()
+    with pytest.raises(AnalysisException) as unreadable:
+        read_symbol_partitioned(spark, str(empty), "parquet")
+    assert unreadable.value.getCondition() == "UNABLE_TO_INFER_SCHEMA"

@@ -129,3 +129,11 @@ def test_ingest_and_transform_jobs_do_not_grow_with_symbols(spark, tmp_path):
         counts[n] = [_stage_jobs(spark, stage, cfg) for stage in (ingest, transform)]
     assert counts[2] == counts[6]
     assert min(counts[2]) >= 1
+
+
+def test_combine_infers_no_schema(spark, tmp_path):
+    # processed/'s schema comes from a file footer: the write is the one job.
+    cfg = PipelineConfig(base_dir=str(tmp_path), symbols=("AAPL", "0700"), periods=20)
+    ingest(spark, cfg)
+    transform(spark, cfg)
+    assert _stage_jobs(spark, pipeline.combine, cfg) == 1
