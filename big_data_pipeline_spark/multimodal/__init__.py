@@ -1,9 +1,7 @@
 from big_data_pipeline_spark.multimodal.columns import (  # noqa: F401
     MEDIA_META_SCHEMA,
+    RASTER_STATS_DDL,
     attach_fake_media,
-    attach_gif_media,
-    attach_jpeg_media,
-    attach_png_media,
     attach_ppm_media,
     attach_wav_media,
     byte_histogram_features,
@@ -12,13 +10,15 @@ from big_data_pipeline_spark.multimodal.columns import (  # noqa: F401
     decode_png,
     decode_wav,
     decoded_audio_features,
-    decoded_gif_stats,
-    decoded_jpeg_stats,
     decoded_pixel_features,
-    decoded_png_stats,
     encode_png,
     frame_sample,
+    gif_payload,
     image_ahash,
+    jpeg_payload,
+    map_payload,
+    png_payload,
+    raster_stats,
     resize_image,
     resize_netpbm,
 )

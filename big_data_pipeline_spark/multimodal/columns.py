@@ -4,25 +4,31 @@ The engine's convention for image/audio/video at 100 TB scale: the
 payload is an opaque ``binary`` column (or, for very large media, an
 object-store URI to fetch inside the UDF) plus a typed metadata struct
 — never a decoded in-memory representation at rest. All per-media
-compute (decode, resize, frame-sample, feature-extract) runs as
-Arrow-batched ``mapInPandas`` so payloads stream through Python in
-columnar batches without ever landing on the driver.
+compute runs through ONE helper, ``map_payload``: an Arrow-batched
+``mapInPandas`` pass that maps each payload cell to a fixed tuple of
+typed fields, keeps every other column and drops the payload, so
+payloads stream through Python in columnar batches without ever landing
+on the driver. ``frame_sample`` (one row to many) and ``resize_image``
+(payload replaced in place) keep their own shapes.
 
 Decoding: two public container formats are decoded FOR REAL by
 dependency-free pure-Python parsers — netpbm images (PGM ``P5`` / PPM
 ``P6``: header tokenizer with ``#`` comments, dimension/maxval parse,
 raster → numpy array, ``decode_netpbm``) and RIFF/WAVE PCM audio
 (chunk walk, ``fmt ``/``data`` parse, 8/16-bit samples, ``decode_wav``).
-One COMPRESSED codec also decodes for real: PNG (``decode_png`` —
+Three COMPRESSED codecs also decode for real: PNG (``decode_png`` —
 signature, chunk CRCs, stdlib ``zlib`` inflate, per-scanline unfilter
 of all five spec filters; 8-bit gray/RGB/RGBA, with ``encode_png`` as
-its fixture-building inverse). Remaining compressed codecs
-(JPEG/MP3/video) still need external libraries that are NOT in this
-environment, so ``decode_image`` falls back to a gated PIL import for
-those formats only. ``attach_ppm_media`` / ``attach_wav_media`` build
-real payloads JVM-side and ``attach_png_media`` builds real PNGs in an
-Arrow pass, so every decode path runs end-to-end on actual container
-bytes and is oracle-checked (workloads/multimodal.py).
+its fixture-building inverse), baseline JPEG (``jpeg.py``) and GIF
+(``gif.py``). MP3/video/progressive JPEG still need external libraries
+that are NOT in this environment, so ``decode_image`` falls back to a
+gated PIL import for those formats only. ``attach_ppm_media`` /
+``attach_wav_media`` build real payloads JVM-side; ``png_payload``,
+``jpeg_payload`` and ``gif_payload`` render document text as real
+PNG/JPEG/GIF bytes inside the same Python pass that decodes and
+measures them (encode → decode → ``raster_stats``, one Arrow crossing),
+so every decode path runs end-to-end on actual container bytes and is
+oracle-checked (workloads/multimodal.py).
 ``resize_image`` is a real nearest-neighbor resample over the decoded
 netpbm raster.
 
@@ -36,13 +42,19 @@ Scale notes:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from big_data_pipeline_spark.multimodal.gif import decode_gif, encode_gif
+from big_data_pipeline_spark.multimodal.jpeg import (
+    decode_jpeg_baseline,
+    encode_jpeg_baseline,
+)
 
 MEDIA_META_SCHEMA = T.StructType(
     [
@@ -55,6 +67,28 @@ MEDIA_META_SCHEMA = T.StructType(
 )
 
 _N_HIST_BINS = 16
+
+
+def map_payload(
+    df: DataFrame, payload_col: str, fields: str, fn: Callable[[object], tuple]
+) -> DataFrame:
+    """One Arrow-batched ``mapInPandas`` pass: ``fn`` maps each cell of
+    ``payload_col`` to a tuple with one value per field of the DDL
+    string ``fields``. The output is every other column of ``df``, in
+    order, followed by those fields; the payload column is dropped."""
+    keep = [f for f in df.schema.fields if f.name != payload_col]
+    names = [f.name for f in keep]
+    added = T.StructType.fromDDL(fields).fields
+    cols = [f.name for f in added]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            vals = pd.DataFrame(
+                [fn(p) for p in pdf[payload_col]], columns=cols, index=pdf.index
+            )
+            yield pd.concat([pdf[names], vals], axis=1)
+
+    return df.mapInPandas(run, schema=T.StructType([*keep, *added]))
 
 
 def attach_fake_media(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -219,54 +253,33 @@ def decoded_audio_features(df: DataFrame, payload_col: str = "media") -> DataFra
     (sum, sum of squares, min, max) plus the mean as one IEEE division.
     Nothing is carried from metadata, so a chunk-walk or fmt mis-parse
     changes the output."""
-    in_cols = [c for c in df.columns if c != payload_col]
-    out_schema = T.StructType(
-        [df.schema[c] for c in in_cols]
-        + [
-            T.StructField("channels", T.IntegerType()),
-            T.StructField("sample_rate", T.IntegerType()),
-            T.StructField("bits", T.IntegerType()),
-            T.StructField("n_samples", T.LongType()),
-            T.StructField("duration_ms", T.LongType()),
-            T.StructField("sum_samples", T.LongType()),
-            T.StructField("sum_sq", T.LongType()),
-            T.StructField("sample_min", T.IntegerType()),
-            T.StructField("sample_max", T.IntegerType()),
-            T.StructField("mean_sample", T.DoubleType()),
-        ]
+
+    def measure(payload) -> tuple:
+        ch, rate, bits, s = decode_wav(bytes(payload))
+        n = len(s)
+        s64 = s.astype(np.int64)
+        total = int(s64.sum())
+        return (
+            ch,
+            rate,
+            bits,
+            n,
+            n * 1000 // rate,
+            total,
+            int((s64 * s64).sum()),
+            int(s.min()) if n else None,
+            int(s.max()) if n else None,
+            total / n if n else None,
+        )
+
+    return map_payload(
+        df,
+        payload_col,
+        "channels int, sample_rate int, bits int, n_samples bigint, "
+        "duration_ms bigint, sum_samples bigint, sum_sq bigint, "
+        "sample_min int, sample_max int, mean_sample double",
+        measure,
     )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for payload in pdf[payload_col]:
-                ch, rate, bits, s = decode_wav(bytes(payload))
-                n = len(s)
-                s64 = s.astype(np.int64)
-                total = int(s64.sum())
-                rows.append(
-                    (
-                        ch,
-                        rate,
-                        bits,
-                        n,
-                        n * 1000 // rate,
-                        total,
-                        int((s64 * s64).sum()),
-                        int(s.min()) if n else None,
-                        int(s.max()) if n else None,
-                        total / n if n else None,
-                    )
-                )
-            out = pdf[in_cols].copy()
-            stats = pd.DataFrame(
-                rows,
-                columns=[f.name for f in out_schema.fields[len(in_cols):]],
-                index=out.index,
-            )
-            yield pd.concat([out, stats], axis=1)
-
-    return df.mapInPandas(extract, schema=out_schema)
 
 
 def _no_decoder() -> None:
@@ -500,366 +513,73 @@ def decode_png(payload: bytes) -> tuple[int, int, int, np.ndarray, list]:
     return w, h, ch, pixels, sorted(filters_seen)
 
 
-_PNG_WIDTH = 16  # attach_png_media: 16 grayscale pixels per scanline
-
-
-def attach_png_media(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Real PNG payloads: grayscale 8-bit, width 16, raster = the UTF-8
-    bytes of ``text_col`` zero-padded to h scanlines (h = ceil(n/16),
-    min 1), scanline filter = row % 5 — every payload exercises all
-    five PNG filters through zlib-compressed IDAT. Because the DECODED
-    raster is exactly the text bytes + zero padding, an independent
-    engine can recompute any pixel statistic from the text alone —
-    the same oracle contract as attach_ppm_media, but through a real
-    compressed codec."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(T.BinaryType())
-    def _enc(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            b = ("" if t is None else t).encode("utf-8")
-            hgt = max(1, -(-len(b) // _PNG_WIDTH))
-            raster = np.frombuffer(
-                b + bytes(hgt * _PNG_WIDTH - len(b)), dtype=np.uint8
-            ).reshape(hgt, _PNG_WIDTH)
-            out.append(encode_png(raster))
-        return pd.Series(out)
-
-    payload = _enc(F.col(text_col))
-    raw_len = F.octet_length(F.encode(F.col(text_col), "UTF-8"))
-    hgt = F.greatest(
-        F.lit(1), F.ceil(raw_len / F.lit(_PNG_WIDTH))
-    ).cast("int")
-    return df.withColumns(
-        {
-            "media": payload,
-            "media_meta": F.struct(
-                F.lit("image").alias("media_type"),
-                F.lit("png").alias("format"),
-                F.lit(_PNG_WIDTH).alias("width"),
-                hgt.alias("height"),
-                F.octet_length(payload).cast("long").alias("n_bytes"),
-            ),
-        }
-    )
-
-
-def decoded_png_stats(df: DataFrame, payload_col: str = "media") -> DataFrame:
-    """REAL compressed decode path: run ``decode_png`` (chunk walk, CRC
-    checks, inflate, unfilter) on each payload inside one Arrow-batched
-    mapInPandas pass and emit integer-exact pixel statistics plus the
-    set of scanline filters the decoder had to undo. Pass-through
-    columns are preserved; the payload column is pruned from the
-    output."""
-    keep = [f for f in df.schema.fields if f.name != payload_col]
-    out_schema = T.StructType(
-        [
-            *keep,
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("channels", T.IntegerType()),
-            T.StructField("n_filters", T.IntegerType()),
-            T.StructField("sum_pixels", T.LongType()),
-            T.StructField("n_zero", T.LongType()),
-            T.StructField("px_min", T.IntegerType()),
-            T.StructField("px_max", T.IntegerType()),
-            T.StructField("mean_pixel", T.DoubleType()),
-        ]
-    )
-    keep_names = [f.name for f in keep]
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for payload in pdf[payload_col]:
-                w, h, ch, px, fts = decode_png(bytes(payload))
-                flat = px.reshape(-1).astype(np.int64)
-                rows.append(
-                    (
-                        w,
-                        h,
-                        ch,
-                        len(fts),
-                        int(flat.sum()),
-                        int((flat == 0).sum()),
-                        int(flat.min()),
-                        int(flat.max()),
-                        float(flat.sum()) / len(flat),
-                    )
-                )
-            stats = pd.DataFrame(
-                rows,
-                columns=[
-                    "width",
-                    "height",
-                    "channels",
-                    "n_filters",
-                    "sum_pixels",
-                    "n_zero",
-                    "px_min",
-                    "px_max",
-                    "mean_pixel",
-                ],
-                index=pdf.index,
-            )
-            yield pd.concat([pdf[keep_names], stats], axis=1)
-
-    return df.mapInPandas(extract, schema=out_schema)
-
-
-# --- baseline JPEG: block-constant payloads with provably exact decode ------
-# attach_jpeg_media builds a REAL baseline JPEG per document: one
-# constant 8x8 block per byte of the first _JPEG_CAP text bytes,
-# _JPEG_BLOCKS_PER_ROW blocks per MCU row, uniform quantizer 8. A
-# constant block has only its DC coefficient non-zero and 8 divides
-# 8*(v-128) exactly, so ANY correct decode — Huffman tables read from
-# the stream, DC differential prediction, zigzag, dequantization, IDCT
-# — reconstructs the byte value v bit-exactly (the nearest rounding
-# decision sits ~1e-12 from a half-integer). That makes the decoded
-# raster a pure function of the text bytes, which a second engine can
-# recompute without a codec — the same oracle contract as
-# attach_png_media, through the lossy-by-nature format. The general
-# AC-bearing path of the codec is pinned by round-trip property tests
-# (tests/test_multimodal.py).
+# --- text-rendered codec payloads with exactly-known rasters ----------------
+# Each *_payload function renders document text as a REAL compressed
+# image whose DECODED raster is a pure function of the text bytes, so an
+# independent engine recomputes any pixel statistic from the text alone
+# (the attach_ppm_media oracle contract) while the Spark side must run
+# the actual codec. The codec queries run encode → decode → raster_stats
+# per document inside one map_payload pass (workloads/multimodal.py).
 #
-# The byte cap bounds decode cost per document (the 64x block blow-up
-# would otherwise make the Huffman loop corpus-quadratic-ish at sf1);
-# the cap is a documented generator parameter, not a decoder limit.
+# - PNG: grayscale 8-bit, 16 pixels per scanline, scanline filter
+#   row % 5, so every payload taller than 4 rows exercises all five
+#   filters through zlib-compressed IDAT.
+# - JPEG: one constant 8x8 block per byte of the first 64 text bytes,
+#   16 blocks per MCU row, uniform quantizer 8. A constant block has
+#   only its DC coefficient non-zero and 8 divides 8*(v-128) exactly, so
+#   ANY correct decode (Huffman tables read from the stream, DC
+#   prediction, zigzag, dequantization, IDCT) reconstructs v bit-exactly
+#   (jpeg.py module docstring). The byte cap bounds decode cost per
+#   document; the AC-bearing path is pinned by round-trip property tests.
+# - GIF: animated grayscale, 16x4-pixel frames of 64 text bytes each, up
+#   to 4 frames, real variable-width LZW per frame (gif.py) — the
+#   frame-walk path on a REAL animated container.
 
-_JPEG_CAP = 64  # text bytes rendered per document
-_JPEG_BLOCKS_PER_ROW = 16  # -> width 128 px
+RASTER_STATS_DDL = (
+    "sum_pixels bigint, n_zero bigint, px_min int, px_max int, mean_pixel double"
+)
 
 
-def attach_jpeg_media(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Real baseline-JPEG payloads whose decode is exactly the first
-    ``_JPEG_CAP`` UTF-8 bytes of ``text_col`` expanded to constant 8x8
-    blocks (row-major, ``_JPEG_BLOCKS_PER_ROW`` per row, zero-byte
-    padding to fill the last row)."""
-    from pyspark.sql.functions import pandas_udf
-
-    from big_data_pipeline_spark.multimodal.jpeg import encode_jpeg_baseline
-
-    @pandas_udf(T.BinaryType())
-    def _enc(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            b = ("" if t is None else t).encode("utf-8")[:_JPEG_CAP]
-            rows = max(1, -(-len(b) // _JPEG_BLOCKS_PER_ROW))
-            vals = np.frombuffer(
-                b + bytes(rows * _JPEG_BLOCKS_PER_ROW - len(b)),
-                dtype=np.uint8,
-            ).reshape(rows, _JPEG_BLOCKS_PER_ROW)
-            img = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1)
-            out.append(encode_jpeg_baseline(img, quant=np.full(64, 8)))
-        return pd.Series(out)
-
-    payload = _enc(F.col(text_col))
-    raw_len = F.least(
-        F.octet_length(F.encode(F.col(text_col), "UTF-8")), F.lit(_JPEG_CAP)
-    )
-    rows = F.greatest(
-        F.lit(1), F.ceil(raw_len / F.lit(_JPEG_BLOCKS_PER_ROW))
-    ).cast("int")
-    return df.withColumns(
-        {
-            "media": payload,
-            "media_meta": F.struct(
-                F.lit("image").alias("media_type"),
-                F.lit("jpeg").alias("format"),
-                F.lit(_JPEG_BLOCKS_PER_ROW * 8).alias("width"),
-                (rows * 8).alias("height"),
-                F.octet_length(payload).cast("long").alias("n_bytes"),
-            ),
-        }
+def raster_stats(pixels: np.ndarray) -> tuple[int, int, int, int, float]:
+    """Integer-exact ``RASTER_STATS_DDL`` fields of a decoded raster:
+    pixel sum, zero count, min, max, and the mean as one IEEE division."""
+    flat = pixels.reshape(-1).astype(np.int64)
+    total = int(flat.sum())
+    return (
+        total,
+        int((flat == 0).sum()),
+        int(flat.min()),
+        int(flat.max()),
+        float(total) / len(flat),
     )
 
 
-def decoded_jpeg_stats(df: DataFrame, payload_col: str = "media") -> DataFrame:
-    """REAL baseline-JPEG decode path: run ``decode_jpeg_baseline``
-    (marker parse, stream-read DHT/DQT, Huffman + DC-prediction entropy
-    decode, dequantize, IDCT) on each payload inside one Arrow-batched
-    mapInPandas pass and emit integer-exact raster statistics.
-    Pass-through columns are preserved; the payload column is pruned."""
-    from big_data_pipeline_spark.multimodal.jpeg import decode_jpeg_baseline
-
-    keep = [f for f in df.schema.fields if f.name != payload_col]
-    out_schema = T.StructType(
-        [
-            *keep,
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("n_blocks", T.IntegerType()),
-            T.StructField("sum_pixels", T.LongType()),
-            T.StructField("n_zero", T.LongType()),
-            T.StructField("px_min", T.IntegerType()),
-            T.StructField("px_max", T.IntegerType()),
-            T.StructField("mean_pixel", T.DoubleType()),
-        ]
-    )
-    keep_names = [f.name for f in keep]
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for payload in pdf[payload_col]:
-                w, h, _ch, px = decode_jpeg_baseline(bytes(payload))
-                flat = px.reshape(-1).astype(np.int64)
-                rows.append(
-                    (
-                        w,
-                        h,
-                        (w // 8) * (h // 8),
-                        int(flat.sum()),
-                        int((flat == 0).sum()),
-                        int(flat.min()),
-                        int(flat.max()),
-                        float(flat.sum()) / len(flat),
-                    )
-                )
-            stats = pd.DataFrame(
-                rows,
-                columns=[
-                    "width",
-                    "height",
-                    "n_blocks",
-                    "sum_pixels",
-                    "n_zero",
-                    "px_min",
-                    "px_max",
-                    "mean_pixel",
-                ],
-                index=pdf.index,
-            )
-            yield pd.concat([pdf[keep_names], stats], axis=1)
-
-    return df.mapInPandas(extract, schema=out_schema)
-
-
-# --- GIF: multi-frame LZW container with an exactly-known raster ------------
-# attach_gif_media renders document text as an ANIMATED grayscale GIF:
-# 16x4-pixel frames of 64 text bytes each (up to _GIF_MAX_FRAMES,
-# zero-padded last frame), real variable-width LZW per frame
-# (multimodal/gif.py). Lossless → the PNG/JPEG oracle contract again:
-# the decoded frame stack is a pure function of the text bytes, so the
-# DuckDB twin recomputes every statistic from hex while the Spark side
-# must run the actual LZW decode + frame walk. This is the frame-
-# sample plumbing (SURVEY multimodal: video frame-sampling) exercised
-# against a REAL animated container rather than the synthetic
-# fake-media payloads.
-
-_GIF_FRAME_W = 16
-_GIF_FRAME_H = 4
-_GIF_FRAME_BYTES = _GIF_FRAME_W * _GIF_FRAME_H  # 64
-_GIF_MAX_FRAMES = 4  # cap: 256 text bytes per document
-
-
-def attach_gif_media(df: DataFrame, text_col: str = "text") -> DataFrame:
-    from pyspark.sql.functions import pandas_udf
-
-    from big_data_pipeline_spark.multimodal.gif import encode_gif
-
-    @pandas_udf(T.BinaryType())
-    def _enc(texts: pd.Series) -> pd.Series:
-        out = []
-        cap = _GIF_FRAME_BYTES * _GIF_MAX_FRAMES
-        for t in texts:
-            b = ("" if t is None else t).encode("utf-8")[:cap]
-            nf = max(1, -(-len(b) // _GIF_FRAME_BYTES))
-            b = b + bytes(nf * _GIF_FRAME_BYTES - len(b))
-            frames = [
-                np.frombuffer(
-                    b[i * _GIF_FRAME_BYTES : (i + 1) * _GIF_FRAME_BYTES],
-                    dtype=np.uint8,
-                ).reshape(_GIF_FRAME_H, _GIF_FRAME_W)
-                for i in range(nf)
-            ]
-            out.append(encode_gif(frames))
-        return pd.Series(out)
-
-    payload = _enc(F.col(text_col))
-    raw_len = F.least(
-        F.octet_length(F.encode(F.col(text_col), "UTF-8")),
-        F.lit(_GIF_FRAME_BYTES * _GIF_MAX_FRAMES),
-    )
-    n_frames = F.greatest(
-        F.lit(1), F.ceil(raw_len / F.lit(_GIF_FRAME_BYTES))
-    ).cast("int")
-    return df.withColumns(
-        {
-            "media": payload,
-            "media_meta": F.struct(
-                F.lit("animation").alias("media_type"),
-                F.lit("gif").alias("format"),
-                F.lit(_GIF_FRAME_W).alias("width"),
-                F.lit(_GIF_FRAME_H).alias("height"),
-                n_frames.alias("n_frames"),
-                F.octet_length(payload).cast("long").alias("n_bytes"),
-            ),
-        }
+def _text_grid(text: str | None, width: int, cap: int | None = None) -> np.ndarray:
+    """The first ``cap`` UTF-8 bytes of ``text`` zero-padded to whole
+    rows of ``width`` bytes (at least one row), as a uint8 matrix."""
+    b = ("" if text is None else text).encode("utf-8")[:cap]
+    rows = max(1, -(-len(b) // width))
+    return np.frombuffer(b + bytes(rows * width - len(b)), dtype=np.uint8).reshape(
+        rows, width
     )
 
 
-def decoded_gif_stats(df: DataFrame, payload_col: str = "media") -> DataFrame:
-    """REAL LZW decode path: run ``decode_gif`` on each payload inside
-    one Arrow-batched mapInPandas pass and emit integer-exact raster
-    statistics over the full frame stack. Pass-through columns are
-    preserved; the payload column is pruned."""
-    from big_data_pipeline_spark.multimodal.gif import decode_gif
+def png_payload(text: str | None) -> bytes:
+    """PNG whose decoded raster is the text bytes on 16-wide scanlines."""
+    return encode_png(_text_grid(text, 16))
 
-    keep = [f for f in df.schema.fields if f.name != payload_col]
-    out_schema = T.StructType(
-        [
-            *keep,
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("n_frames", T.IntegerType()),
-            T.StructField("sum_pixels", T.LongType()),
-            T.StructField("n_zero", T.LongType()),
-            T.StructField("px_min", T.IntegerType()),
-            T.StructField("px_max", T.IntegerType()),
-            T.StructField("mean_pixel", T.DoubleType()),
-        ]
-    )
-    keep_names = [f.name for f in keep]
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for payload in pdf[payload_col]:
-                w, h, frames = decode_gif(bytes(payload))
-                flat = np.concatenate(
-                    [f.reshape(-1) for f in frames]
-                ).astype(np.int64)
-                rows.append(
-                    (
-                        w,
-                        h,
-                        len(frames),
-                        int(flat.sum()),
-                        int((flat == 0).sum()),
-                        int(flat.min()),
-                        int(flat.max()),
-                        float(flat.sum()) / len(flat),
-                    )
-                )
-            stats = pd.DataFrame(
-                rows,
-                columns=[
-                    "width",
-                    "height",
-                    "n_frames",
-                    "sum_pixels",
-                    "n_zero",
-                    "px_min",
-                    "px_max",
-                    "mean_pixel",
-                ],
-                index=pdf.index,
-            )
-            yield pd.concat([pdf[keep_names], stats], axis=1)
+def jpeg_payload(text: str | None) -> bytes:
+    """Baseline JPEG: each of the first 64 text bytes as a constant 8x8
+    block, 16 blocks per row (width 128)."""
+    grid = _text_grid(text, 16, 64)
+    img = np.repeat(np.repeat(grid, 8, axis=0), 8, axis=1)
+    return encode_jpeg_baseline(img, quant=np.full(64, 8))
 
-    return df.mapInPandas(extract, schema=out_schema)
+
+def gif_payload(text: str | None) -> bytes:
+    """Animated GIF: the first 256 text bytes as 16x4 frames."""
+    return encode_gif(_text_grid(text, 64, 256).reshape(-1, 4, 16))
 
 
 def decode_image(payload: bytes):
@@ -872,14 +592,8 @@ def decode_image(payload: bytes):
     if payload[:8] == _PNG_SIG:
         return decode_png(payload)[3]
     if payload[:2] == b"\xff\xd8":
-        from big_data_pipeline_spark.multimodal.jpeg import (
-            decode_jpeg_baseline,
-        )
-
         return decode_jpeg_baseline(payload)[3]
     if payload[:6] in (b"GIF87a", b"GIF89a"):
-        from big_data_pipeline_spark.multimodal.gif import decode_gif
-
         return decode_gif(payload)[2][0]
     try:
         import io
@@ -890,6 +604,13 @@ def decode_image(payload: bytes):
     return np.asarray(Image.open(io.BytesIO(payload)))
 
 
+def _nibble_hist(arr: np.ndarray) -> list[float]:
+    """Normalized 16-bin histogram of the high nibbles of uint8 bytes."""
+    hist = np.bincount(arr >> 4, minlength=_N_HIST_BINS).astype(np.float64)
+    total = hist.sum()
+    return (hist / total if total else hist).tolist()
+
+
 def byte_histogram_features(df: DataFrame, payload_col: str = "media") -> DataFrame:
     """Per-media feature vector: normalized 16-bin byte histogram.
 
@@ -897,27 +618,12 @@ def byte_histogram_features(df: DataFrame, payload_col: str = "media") -> DataFr
     Spark plumbing: Arrow-batched ``mapInPandas``, fixed-width
     ``array<double>`` output. Keyed pass-through columns are preserved.
     """
-    in_cols = [c for c in df.columns if c != payload_col]
-    out_schema = T.StructType(
-        [df.schema[c] for c in in_cols]
-        + [T.StructField("features", T.ArrayType(T.DoubleType()))]
+    return map_payload(
+        df,
+        payload_col,
+        "features array<double>",
+        lambda p: (_nibble_hist(np.frombuffer(p, dtype=np.uint8)),),
     )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for payload in pdf[payload_col]:
-                arr = np.frombuffer(payload, dtype=np.uint8)
-                hist = np.bincount(arr >> 4, minlength=_N_HIST_BINS).astype(
-                    np.float64
-                )
-                total = hist.sum()
-                feats.append((hist / total if total else hist).tolist())
-            out = pdf[in_cols].copy()
-            out["features"] = feats
-            yield out
-
-    return df.mapInPandas(extract, schema=out_schema)
 
 
 def decoded_pixel_features(df: DataFrame, payload_col: str = "media") -> DataFrame:
@@ -927,39 +633,17 @@ def decoded_pixel_features(df: DataFrame, payload_col: str = "media") -> DataFra
     histogram of the pixel bytes. Nothing is carried through from
     metadata: a header mis-parse or raster mis-slice changes the output
     (which is what makes the oracle check meaningful)."""
-    in_cols = [c for c in df.columns if c != payload_col]
-    out_schema = T.StructType(
-        [df.schema[c] for c in in_cols]
-        + [
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("maxval", T.IntegerType()),
-            T.StructField("features", T.ArrayType(T.DoubleType())),
-        ]
+
+    def measure(payload) -> tuple:
+        _, w, h, mv, pixels = decode_netpbm(bytes(payload))
+        return w, h, mv, _nibble_hist(pixels.reshape(-1))
+
+    return map_payload(
+        df,
+        payload_col,
+        "width int, height int, maxval int, features array<double>",
+        measure,
     )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            widths, heights, maxvals, feats = [], [], [], []
-            for payload in pdf[payload_col]:
-                _, w, h, mv, pixels = decode_netpbm(bytes(payload))
-                flat = pixels.reshape(-1)
-                hist = np.bincount(flat >> 4, minlength=_N_HIST_BINS).astype(
-                    np.float64
-                )
-                total = hist.sum()
-                widths.append(w)
-                heights.append(h)
-                maxvals.append(mv)
-                feats.append((hist / total if total else hist).tolist())
-            out = pdf[in_cols].copy()
-            out["width"] = widths
-            out["height"] = heights
-            out["maxval"] = maxvals
-            out["features"] = feats
-            yield out
-
-    return df.mapInPandas(extract, schema=out_schema)
 
 
 def frame_sample(
@@ -1047,33 +731,16 @@ def image_ahash(
     reproducible by the hex-space SQL oracle. One narrow Arrow pass,
     no shuffle; the payload column prunes away immediately after.
     """
-    in_cols = [c for c in df.columns if c != payload_col]
-    out_schema = T.StructType(
-        [df.schema[c] for c in in_cols]
-        + [
-            T.StructField("ahash", T.StringType()),
-            T.StructField("n_bright", T.IntegerType()),
-        ]
-    )
     n_cells = grid * grid
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            hashes, brights = [], []
-            for payload in pdf[payload_col]:
-                _, w, h, _, px = decode_netpbm(bytes(payload))
-                if px.ndim == 2:  # P5: treat gray as a single channel
-                    px = px[:, :, None]
-                ys = (np.arange(grid) * h) // grid
-                xs = (np.arange(grid) * w) // grid
-                cells = px[ys][:, xs].astype(np.int64).sum(axis=2)
-                total = int(cells.sum())
-                bits = (n_cells * cells > total).reshape(-1)
-                hashes.append("".join("1" if b else "0" for b in bits))
-                brights.append(int(bits.sum()))
-            out = pdf[in_cols].copy()
-            out["ahash"] = hashes
-            out["n_bright"] = brights
-            yield out
+    def measure(payload) -> tuple:
+        _, w, h, _, px = decode_netpbm(bytes(payload))
+        if px.ndim == 2:  # P5: treat gray as a single channel
+            px = px[:, :, None]
+        ys = (np.arange(grid) * h) // grid
+        xs = (np.arange(grid) * w) // grid
+        cells = px[ys][:, xs].astype(np.int64).sum(axis=2)
+        bits = (n_cells * cells > int(cells.sum())).reshape(-1)
+        return "".join("1" if b else "0" for b in bits), int(bits.sum())
 
-    return df.mapInPandas(extract, schema=out_schema)
+    return map_payload(df, payload_col, "ahash string, n_bright int", measure)

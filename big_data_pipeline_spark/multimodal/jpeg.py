@@ -23,9 +23,10 @@ JPEG being lossy): a constant 8x8 block has only its DC coefficient
 non-zero; with the DC quantizer dividing 8·(v−128) exactly, the
 reconstruction is mathematically the constant v again, and every step
 of any correct IDCT evaluates it without a rounding decision closer
-than ~1e-12 to a half-integer. attach_jpeg_media (columns.py) builds
-such block-constant payloads from document text, so the DuckDB twin
-recomputes the expected raster statistics from the text bytes alone —
+than ~1e-12 to a half-integer. jpeg_payload (columns.py) renders
+document text as such block-constant payloads inside the same Arrow
+pass that decodes and measures them, so the DuckDB twin recomputes the
+expected raster statistics from the text bytes alone —
 while THIS decoder still has to get the Huffman tables, DC prediction,
 zigzag, dequantization, IDCT and block layout right to reproduce them.
 The general (AC-bearing) path is pinned by round-trip property tests:

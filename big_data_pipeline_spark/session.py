@@ -49,6 +49,10 @@ _DEFAULTS: dict[str, str] = {
 }
 
 
+_WORKER_PATH = "spark.executorEnv.PYTHONPATH"
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def s3a_conf(
     endpoint: str | None = None,
     access_key: str | None = None,
@@ -95,9 +99,13 @@ def get_spark(
         master = f"local[{os.environ['SPARK_GRAFT_CPUS']}]"
     if master:
         builder = builder.master(master)
-    for k, v in _DEFAULTS.items():
+    conf = {**_DEFAULTS, **(extra_conf or {})}
+    # Python workers start as the package's daemon module and unpickle
+    # engine UDFs by reference, so they need the package root on their
+    # path wherever the driver script runs from.
+    conf[_WORKER_PATH] = os.pathsep.join(
+        p for p in (conf.get(_WORKER_PATH), _PACKAGE_ROOT) if p
+    )
+    for k, v in conf.items():
         builder = builder.config(k, v)
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -193,7 +193,8 @@ FROM keymult
 # against the parent's distinct key set; dimension parents broadcast,
 # fact-fact edges shuffle on the FK — the same shape the production
 # join would use, so the audit never costs more than the join it
-# protects. Per-edge aggregates are single rows; the union is free.
+# protects. Each child's aggregate is one row, stacked into one row per
+# edge; the union of children is free.
 # Both engines' queries are generated from the same relation list so
 # they cannot drift.
 
@@ -219,18 +220,18 @@ def fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # left join against a DISTINCT parent key set never fans out. At
     # corpus scale this turns 3 full child scans into 1 (guide §2.4);
     # the per-edge aggregates and the 7-row output are unchanged.
-    by_child: dict[str, list[tuple[int, str, str, str]]] = {}
-    for r, (child, fk, parent, pk) in enumerate(_FK_RELATIONS):
-        by_child.setdefault(child, []).append((r, fk, parent, pk))
+    by_child: dict[str, list[tuple[str, str, str]]] = {}
+    for child, fk, parent, pk in _FK_RELATIONS:
+        by_child.setdefault(child, []).append((fk, parent, pk))
 
-    # keyed by relation index: output rows keep the _FK_RELATIONS order,
-    # and two edges sharing a child FK column stay distinct rows
-    row_frames: dict[int, DataFrame] = {}
+    # _FK_RELATIONS lists each child's edges together, so one stack() row
+    # per edge off each child's single aggregate row keeps its order
+    parts = []
     for child, edges in by_child.items():
         joined = read_table(spark, sf_dir, child).select(
-            *[F.col(fk).alias(f"fk_{i}") for i, (_, fk, _, _) in enumerate(edges)]
+            *[F.col(fk).alias(f"fk_{i}") for i, (fk, _, _) in enumerate(edges)]
         )
-        for i, (_, _, parent, pk) in enumerate(edges):
+        for i, (_, parent, pk) in enumerate(edges):
             p = (
                 read_table(spark, sf_dir, parent)
                 .select(F.col(pk).alias(f"pk_{i}"))
@@ -258,16 +259,17 @@ def fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ).alias(f"n_orphan_keys_{i}"),
                 ]
             )
-        stats = joined.agg(*aggs)
-        for i, (r, fk, parent, pk) in enumerate(edges):
-            row_frames[r] = stats.select(
-                F.lit(f"{child}.{fk}->{parent}.{pk}").alias("relation"),
-                F.col("n_child_rows"),
-                F.col(f"n_null_fk_{i}").alias("n_null_fk"),
-                F.col(f"n_orphan_rows_{i}").alias("n_orphan_rows"),
-                F.col(f"n_orphan_keys_{i}").alias("n_orphan_keys"),
+        rows = ", ".join(
+            f"'{child}.{fk}->{parent}.{pk}', n_child_rows, n_null_fk_{i}, "
+            f"n_orphan_rows_{i}, n_orphan_keys_{i}"
+            for i, (fk, parent, pk) in enumerate(edges)
+        )
+        parts.append(
+            joined.agg(*aggs).selectExpr(
+                f"stack({len(edges)}, {rows}) AS (relation, n_child_rows, "
+                "n_null_fk, n_orphan_rows, n_orphan_keys)"
             )
-    parts = [row_frames[r] for r in range(len(_FK_RELATIONS))]
+        )
     return reduce(lambda a, b: a.unionAll(b), parts)
 
 

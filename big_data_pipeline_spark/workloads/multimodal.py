@@ -25,8 +25,7 @@ Scale notes:
 
 from __future__ import annotations
 
-import pandas as pd
-
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -38,9 +37,24 @@ from big_data_pipeline_spark.functions.vectors import (
 )
 from big_data_pipeline_spark.io import read_table
 from big_data_pipeline_spark.multimodal import (
+    RASTER_STATS_DDL,
     attach_fake_media,
-    byte_histogram_features,
+    attach_ppm_media,
+    attach_wav_media,
+    decode_gif,
+    decode_jpeg_baseline,
+    decode_netpbm,
+    decode_png,
+    decoded_audio_features,
+    decoded_pixel_features,
     frame_sample,
+    gif_payload,
+    image_ahash,
+    jpeg_payload,
+    map_payload,
+    png_payload,
+    raster_stats,
+    resize_image,
 )
 
 # --- binary metadata projection (oracle-checked) ----------------------------
@@ -82,11 +96,6 @@ FROM documents
 
 
 def multimodal_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from big_data_pipeline_spark.multimodal import (
-        attach_ppm_media,
-        decoded_pixel_features,
-    )
-
     docs = attach_ppm_media(read_table(spark, sf_dir, "documents"))
     feats = decoded_pixel_features(docs.select("doc_id", "media"))
     # f0 = fraction of pixel bytes with high nibble 0 (ASCII control
@@ -136,11 +145,6 @@ FROM d
 
 
 def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from big_data_pipeline_spark.multimodal import (
-        attach_wav_media,
-        decoded_audio_features,
-    )
-
     docs = attach_wav_media(read_table(spark, sf_dir, "documents"))
     return decoded_audio_features(docs.select("doc_id", "media"))
 
@@ -189,8 +193,6 @@ _RESIZE_HEADER_HEX = "50360A3820340A3235350A"  # 'P6\n8 4\n255\n'
 
 
 def multimodal_resize_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from big_data_pipeline_spark.multimodal import attach_ppm_media, resize_image
-
     docs = attach_ppm_media(read_table(spark, sf_dir, "documents"))
     resized = resize_image(
         docs.select("doc_id", "media"), out_w=_RESIZE_W, out_h=_RESIZE_H
@@ -246,8 +248,6 @@ _AHASH_GRID = 8
 
 
 def multimodal_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from big_data_pipeline_spark.multimodal import attach_ppm_media, image_ahash
-
     docs = attach_ppm_media(read_table(spark, sf_dir, "documents"))
     hashed = image_ahash(
         docs.select("doc_id", "media"), grid=_AHASH_GRID
@@ -382,8 +382,8 @@ SELECT id_a, id_b, cos_sim FROM pairs WHERE cos_sim >= {_NEARDUP_THRESHOLD}
 # rows to ok / quarantine with a reason. Corruption is injected
 # deterministically (doc_id % 7 == 0: magic byte overwritten;
 # doc_id % 7 == 1: raster truncated below the header's promise), the
-# classification comes from the actual pure-Python netpbm parse in an
-# Arrow-batched UDF — and the DuckDB oracle derives the EXPECTED
+# classification comes from the actual pure-Python netpbm parse in one
+# map_payload pass — and the DuckDB oracle derives the EXPECTED
 # status analytically from the same corruption rule, so a parser that
 # misclassifies any payload breaks the hash match.
 #
@@ -395,14 +395,6 @@ SELECT id_a, id_b, cos_sim FROM pairs WHERE cos_sim >= {_NEARDUP_THRESHOLD}
 def multimodal_corrupt_quarantine(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
-    from big_data_pipeline_spark.multimodal import (
-        attach_ppm_media,
-        decode_netpbm,
-    )
-
     docs = attach_ppm_media(read_table(spark, sf_dir, "documents"))
     corrupted = docs.withColumn(
         "media",
@@ -422,31 +414,22 @@ def multimodal_corrupt_quarantine(
         .otherwise(F.col("media")),
     )
 
-    @pandas_udf(
-        T.StructType(
-            [
-                T.StructField("status", T.StringType()),
-                T.StructField("width", T.IntegerType()),
-                T.StructField("height", T.IntegerType()),
-            ]
-        )
-    )
-    def validate(media: pd.Series) -> pd.DataFrame:
-        out = []
-        for payload in media:
-            b = bytes(payload)
-            if b[:2] not in (b"P5", b"P6"):
-                out.append(("bad_magic", None, None))
-                continue
-            try:
-                _, w, h, _, _ = decode_netpbm(b)
-                out.append(("ok", w, h))
-            except ValueError:
-                out.append(("truncated", None, None))
-        return pd.DataFrame(out, columns=["status", "width", "height"])
+    def validate(payload) -> tuple:
+        b = bytes(payload)
+        if b[:2] not in (b"P5", b"P6"):
+            return "bad_magic", None, None
+        try:
+            _, w, h, _, _ = decode_netpbm(b)
+        except ValueError:
+            return "truncated", None, None
+        return "ok", w, h
 
-    v = corrupted.select("doc_id", validate("media").alias("v"))
-    return v.select("doc_id", "v.status", "v.width", "v.height")
+    return map_payload(
+        corrupted.select("doc_id", "media"),
+        "media",
+        "status string, width int, height int",
+        validate,
+    )
 
 
 _QUARANTINE_SQL = """
@@ -463,33 +446,38 @@ FROM documents
 """
 
 
-# --- REAL compressed-codec decode: PNG chunk walk + inflate + unfilter ------
-# attach_png_media builds genuine zlib-compressed PNGs (grayscale,
-# width 16, scanline filter = row % 5 so all five spec filters appear
-# in every payload taller than 4 rows); decode_png walks chunks with
-# CRC verification, inflates the IDAT stream, and UNDOES the filters —
-# the statistics below come from the reconstructed raster, so a wrong
-# Paeth/average/sub reconstruction breaks the hash match. The DuckDB
-# twin recomputes every value from the text bytes in hex space (the
-# decoded raster is exactly text bytes + zero padding) and the filter
-# count from the deterministic row % 5 schedule. This is the round-5
-# closure of the codec gate: one real compressed format end-to-end.
+# --- REAL compressed codecs: PNG, baseline JPEG, GIF -----------------------
+# Each codec query renders every document as a genuine compressed image
+# (multimodal/columns.py *_payload: PNG with all five scanline filters,
+# block-constant baseline JPEG, animated LZW GIF), decodes it with the
+# real codec and measures the DECODED raster — encode → decode →
+# raster_stats per document in ONE map_payload pass, so the query crosses
+# into Python once. Every raster is a pure function of the text bytes,
+# so the DuckDB twins recompute each statistic from hex (and the PNG
+# filter count from the row % 5 schedule), while a wrong unfilter,
+# Huffman/IDCT step or LZW code-width change on the Spark side breaks
+# the hash match.
 #
-# Scale shape: one narrow Arrow pass, no shuffle; payloads never land
-# on the driver. Decode cost is linear in raster bytes; the Python
-# unfilter loop runs only on the left-dependent filter rows (3 of 5).
+# Scale shape: the (doc_id, text) projection is repartitioned to every
+# core first (the codec kernels are the cost and a small corpus arrives
+# as ONE parquet split; at cluster scale this is a cheap two-column
+# shuffle), then one narrow Arrow pass, no shuffle after; decode cost is
+# linear in (capped) raster bytes.
 
 
-def multimodal_png_pixel_stats(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from big_data_pipeline_spark.multimodal import (
-        attach_png_media,
-        decoded_png_stats,
-    )
+def _codec_stats(spark: SparkSession, sf_dir: str, fields: str, measure) -> DataFrame:
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = docs.repartition(spark.sparkContext.defaultParallelism)
+    return map_payload(docs, "text", f"{fields}, {RASTER_STATS_DDL}", measure)
 
-    docs = attach_png_media(read_table(spark, sf_dir, "documents"))
-    return decoded_png_stats(docs.select("doc_id", "media"))
+
+def multimodal_png_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    def measure(text) -> tuple:
+        w, h, ch, px, fts = decode_png(png_payload(text))
+        return (w, h, ch, len(fts), *raster_stats(px))
+
+    fields = "width int, height int, channels int, n_filters int"
+    return _codec_stats(spark, sf_dir, fields, measure)
 
 
 _PNG_STATS_SQL = """
@@ -524,44 +512,12 @@ FROM d
 """
 
 
-# --- REAL lossy-codec decode: baseline JPEG end-to-end ----------------------
-# attach_jpeg_media builds genuine baseline JPEGs (SOI/DQT/SOF0/DHT/
-# SOS/EOI, canonical Huffman entropy coding with byte stuffing): one
-# constant 8x8 block per byte of the first 64 text bytes, 16 blocks
-# per MCU row, uniform quantizer 8. Constant blocks are the
-# determinism trick (multimodal/jpeg.py module docstring): DC-only
-# blocks with an exactly-dividing quantizer reconstruct the byte value
-# bit-exactly under any correct IDCT, so the decoded raster is a pure
-# function of the text bytes and the DuckDB twin recomputes every
-# statistic from hex — while the Spark side must execute the REAL
-# decode (stream-read Huffman tables, DC prediction, zigzag, dequant,
-# IDCT) to reproduce them. The AC-bearing general path is pinned by
-# round-trip property tests (tests/test_multimodal.py). This closes
-# the r5 VERDICT item-5 gap: JPEG was the last widely-hit format
-# behind the codec gate.
-#
-# Scale shape: one narrow Arrow pass over the payload column, no
-# shuffle, decode cost linear in (capped) raster bytes per doc.
+def multimodal_jpeg_block_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    def measure(text) -> tuple:
+        w, h, _, px = decode_jpeg_baseline(jpeg_payload(text))
+        return (w, h, (w // 8) * (h // 8), *raster_stats(px))
 
-
-def multimodal_jpeg_block_stats(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from big_data_pipeline_spark.multimodal import (
-        attach_jpeg_media,
-        decoded_jpeg_stats,
-    )
-
-    # The encode+decode Python kernels are the cost here and a small
-    # corpus arrives as ONE parquet split — repartition the narrow
-    # (doc_id, text) projection first so the Arrow batches spread over
-    # every core (measured 13s -> <1s at sf0.1 on local[32]); at
-    # cluster scale the corpus has many splits and this is a no-op-cost
-    # shuffle of two columns.
-    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
-    media = attach_jpeg_media(docs)
-    return decoded_jpeg_stats(media.select("doc_id", "media"))
+    return _codec_stats(spark, sf_dir, "width int, height int, n_blocks int", measure)
 
 
 _JPEG_STATS_SQL = """
@@ -596,35 +552,12 @@ FROM d
 """
 
 
-# --- REAL animated-container decode: GIF multi-frame LZW --------------------
-# attach_gif_media renders each document as an ANIMATED grayscale GIF
-# (16x4 frames of 64 text bytes, up to 4 frames, real variable-width
-# LZW per frame — multimodal/gif.py). GIF is lossless, so the decoded
-# frame stack is exactly the capped text bytes + zero padding and the
-# DuckDB twin recomputes every statistic from hex — while the Spark
-# side must execute the real LZW decode (code-width growth, clear/EOI,
-# sub-block reassembly) and walk every frame. Alongside PNG (zlib) and
-# JPEG (DCT/Huffman) this covers the third major compressed format a
-# scraped multimodal corpus meets, and exercises the video-like
-# frame-walk path on a REAL container.
-#
-# Scale shape: one narrow Arrow pass, repartitioned like the JPEG
-# query (small corpora arrive as one split), no shuffle after; decode
-# cost linear in (capped) raster bytes.
+def multimodal_gif_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    def measure(text) -> tuple:
+        w, h, frames = decode_gif(gif_payload(text))
+        return (w, h, len(frames), *raster_stats(np.stack(frames)))
 
-
-def multimodal_gif_frame_stats(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from big_data_pipeline_spark.multimodal import (
-        attach_gif_media,
-        decoded_gif_stats,
-    )
-
-    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
-    media = attach_gif_media(docs)
-    return decoded_gif_stats(media.select("doc_id", "media"))
+    return _codec_stats(spark, sf_dir, "width int, height int, n_frames int", measure)
 
 
 _GIF_STATS_SQL = """

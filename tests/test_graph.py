@@ -3,13 +3,25 @@ numpy recomputation on the same (small) graph."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import numpy as np
 import pandas as pd
+import pytest
 
 from big_data_pipeline_spark.workloads.graph_rank import (
     _pagerank_driver,
     trade_edges,
 )
+
+
+@pytest.fixture(scope="module")
+def trade_sf_dir(sf_dir) -> str:
+    """The traversal tests read the sf0.01 corpus next to ``sf_dir``: at
+    sf0.001 (and sf0.1) the strong-edge trade graph leaves the BFS source
+    isolated, so BFS reaches only the source and the assertions below
+    would hold trivially; at sf0.01 it reaches 20 nations over 3 levels."""
+    return str(Path(sf_dir).parent / "sf0.01")
 
 
 def _numpy_pagerank(edges, damping=0.85, iters=15):
@@ -94,32 +106,31 @@ def test_kcore_peel_empty_when_k_too_high():
     assert len(_kcore_driver(tri, 2, _KCORE_ROUNDS)) == 6  # symmetric triangle
 
 
-def test_bfs_hops_are_consistent(spark, sf_dir):
+def test_bfs_hops_are_consistent(spark, trade_sf_dir):
     from big_data_pipeline_spark.workloads.graph_rank import (
         _BFS_SOURCE,
         bfs_trade_hops,
     )
 
-    rows = {r.nation: r.hop for r in bfs_trade_hops(
-        spark, "/root/testdata/sf0.01").collect()}
+    rows = {r.nation: r.hop for r in bfs_trade_hops(spark, trade_sf_dir).collect()}
     assert rows[_BFS_SOURCE] == 0
     assert all(h >= 0 for h in rows.values())
     # hop levels are contiguous: if any node sits at hop h > 0, some
     # node sits at h - 1 (frontier BFS can't skip a level)
     levels = set(rows.values())
     assert levels == set(range(max(levels) + 1))
+    assert max(levels) >= 2  # the frontier really advanced twice
 
 
-def test_sssp_dominated_by_bfs_structure(spark):
+def test_sssp_dominated_by_bfs_structure(spark, trade_sf_dir):
     from big_data_pipeline_spark.workloads.graph_rank import (
         _BFS_SOURCE,
         bfs_trade_hops,
         sssp_trade_cost,
     )
 
-    sf = "/root/testdata/sf0.01"
-    hops = {r.nation: r.hop for r in bfs_trade_hops(spark, sf).collect()}
-    costs = {r.nation: r.cost for r in sssp_trade_cost(spark, sf).collect()}
+    hops = {r.nation: r.hop for r in bfs_trade_hops(spark, trade_sf_dir).collect()}
+    costs = {r.nation: r.cost for r in sssp_trade_cost(spark, trade_sf_dir).collect()}
     # same reachable set, zero at the source
     assert set(hops) == set(costs)
     assert costs[_BFS_SOURCE] == 0
@@ -128,17 +139,16 @@ def test_sssp_dominated_by_bfs_structure(spark):
         assert costs[n] >= h
 
 
-def test_closeness_agrees_with_single_source_bfs(spark):
+def test_closeness_agrees_with_single_source_bfs(spark, trade_sf_dir):
     from big_data_pipeline_spark.workloads.graph_rank import (
         _BFS_SOURCE,
         bfs_trade_hops,
         closeness_trade_centrality,
     )
 
-    sf = "/root/testdata/sf0.01"
-    hops = {r.nation: r.hop for r in bfs_trade_hops(spark, sf).collect()}
+    hops = {r.nation: r.hop for r in bfs_trade_hops(spark, trade_sf_dir).collect()}
     cc = {
-        r.nation: r for r in closeness_trade_centrality(spark, sf).collect()
+        r.nation: r for r in closeness_trade_centrality(spark, trade_sf_dir).collect()
     }
     # the multi-source run must reproduce the single-source BFS exactly
     src = cc[_BFS_SOURCE]

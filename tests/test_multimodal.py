@@ -119,33 +119,17 @@ def test_png_decoder_rejects_corruption():
         decode_png(good[: len(good) - 16])
 
 
-def test_attach_png_media_roundtrips_through_decoder(spark):
-    """The attached payloads are genuine PNGs whose decoded raster is
+def test_png_payload_roundtrips_through_decoder():
+    """The rendered payloads are genuine PNGs whose decoded raster is
     exactly the text bytes zero-padded to 16-wide scanlines."""
-    import numpy as np
+    from big_data_pipeline_spark.multimodal import decode_png, png_payload
 
-    from big_data_pipeline_spark.multimodal import (
-        attach_png_media,
-        decode_png,
-    )
-
-    rows = [(1, "hello png world"), (2, "x" * 40), (3, "")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {
-        r.doc_id: r
-        for r in attach_png_media(df).select(
-            "doc_id", "text", "media", "media_meta"
-        ).collect()
-    }
-    for doc_id, r in out.items():
-        w, h, ch, px, fts = decode_png(bytes(r.media))
-        b = r.text.encode("utf-8")
+    for text in ("hello png world", "x" * 40, "", "é" * 30):
+        w, h, ch, px, fts = decode_png(png_payload(text))
+        b = text.encode("utf-8")
         hgt = max(1, -(-len(b) // 16))
         assert (w, h, ch) == (16, hgt, 1)
-        assert r.media_meta.height == hgt
-        assert r.media_meta.format == "png"
-        flat = px.reshape(-1).tobytes()
-        assert flat == b + bytes(hgt * 16 - len(b))
+        assert px.reshape(-1).tobytes() == b + bytes(hgt * 16 - len(b))
         assert fts == sorted({r % 5 for r in range(hgt)})
 
 

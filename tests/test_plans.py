@@ -22,6 +22,14 @@ def _plan(spark, sf_dir, name: str) -> str:
     return buf.getvalue()
 
 
+def _executed_plan(df) -> str:
+    """Run ``df`` and return its executed physical plan — under AQE the
+    final plan only, not the initial plan printed after it."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
 def test_q1_pushes_filter_and_prunes_columns(spark, sf_dir):
     plan = _plan(spark, sf_dir, "q1_pricing_summary")
     assert "LessThanOrEqual(l_shipdate" in plan  # predicate at the scan
@@ -1031,9 +1039,25 @@ def test_conformal_q_is_broadcast_scalar(spark, sf_dir):
 
 
 def test_quarantine_single_arrow_pass_no_shuffle(spark, sf_dir):
+    import re
+
     plan = _plan(spark, sf_dir, "multimodal_corrupt_quarantine")
-    assert "ArrowEvalPython" in plan
+    assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 1
+    assert "ArrowEvalPython" not in plan
     assert "Exchange" not in plan  # scan -> build -> validate, no shuffle
+
+
+def test_codec_queries_cross_into_python_once(spark, sf_dir):
+    """encode → decode → stats run in ONE MapInPandas per codec query:
+    no pandas_udf (ArrowEvalPython) encodes ahead of the decode pass."""
+    for name in (
+        "multimodal_png_pixel_stats",
+        "multimodal_jpeg_block_stats",
+        "multimodal_gif_frame_stats",
+    ):
+        plan = _executed_plan(entrymod.queries()[name](spark, sf_dir))
+        assert plan.count("MapInPandas") == 1, name
+        assert "ArrowEvalPython" not in plan, name
 
 
 # --- registry-wide plan audit: intentionality of known warning shapes -------
@@ -1230,17 +1254,19 @@ def test_item_item_single_customer_exchange(spark, sf_dir):
 
 
 def test_fk_audit_multi_edge_child_scanned_once(spark, sf_dir):
-    """r10: a child table with several FK edges (lineitem: 3) is scanned
-    once with every parent attached to the same pass — the plan must
-    carry the fused projection (fk_0..fk_2) instead of one scan per
-    edge."""
-    plan = _plan(spark, sf_dir, "fk_integrity_audit")
-    assert "fk_2" in plan
-    # 5 child scans (lineitem, orders, customer, supplier, nation) +
-    # 5 parent scans (orders, part, supplier, customer, nation ×ReusedX,
-    # region) — formatted output doubles each (tree + detail); the old
-    # per-edge shape carried 14 physical scans
-    assert plan.count("Scan parquet") <= 28
+    """A child table with several FK edges (lineitem: 3) is scanned once:
+    every parent attaches to the same pass and the child's one aggregate
+    row is stacked into its edge rows, in relation order."""
+    import re
+
+    df = entrymod.queries()["fk_integrity_audit"](spark, sf_dir)
+    plan = _executed_plan(df)
+    scans = re.findall(r"Scan parquet [^\n]*", plan)
+    assert sum("/lineitem" in s for s in scans) == 1
+    assert [r.relation.split(".")[0] for r in df.collect()] == [
+        "lineitem", "lineitem", "lineitem", "orders", "customer",
+        "supplier", "nation",
+    ]
 
 
 def test_nb_confusion_single_token_pass(spark, sf_dir):

@@ -3,9 +3,13 @@
 from __future__ import annotations
 
 import importlib
+import os
+import subprocess
 import sys
+import textwrap
 import zipfile
 import zipimport
+from pathlib import Path
 
 import pandas as pd
 
@@ -55,3 +59,26 @@ def test_python_workers_run_the_engine_daemon(spark):
 
     got = {r.m for r in spark.range(4).mapInPandas(probe, "m string").collect()}
     assert got == {"big_data_pipeline_spark.worker_daemon"}
+
+
+def test_workers_import_the_package_outside_the_repo(tmp_path):
+    """A driver script started outside the repo root, with the package on
+    its own ``sys.path`` but no ``PYTHONPATH``, still runs Python UDFs:
+    ``get_spark`` hands the package root to the workers."""
+    repo = Path(__file__).resolve().parents[1]
+    script = tmp_path / "drive.py"
+    script.write_text(textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {str(repo)!r})
+        from big_data_pipeline_spark.session import get_spark
+        spark = get_spark(
+            "outside-repo", master="local[1]",
+            extra_conf={{"spark.ui.enabled": "false"}})
+        print("rows", spark.range(3).mapInPandas(lambda it: it, "id long").count())
+    """))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    run = subprocess.run(
+        [sys.executable, str(script)], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300)
+    assert run.returncode == 0, run.stderr[-3000:]
+    assert "rows 3" in run.stdout

@@ -66,13 +66,13 @@ HEADLINE = [
     ("cf_hitrate_eval", "temporal split, WindowGroupLimit top-K, broadcast join"),
     ("bfs_trade_hops", "driver-solved BFS: collected edges + numpy frontier"),
     ("span_first_occurrence_dedup", "packed-key min combine + keep-first join"),
-    ("multimodal_png_pixel_stats", "one Arrow pass: encode/decode, no shuffle"),
+    ("multimodal_png_pixel_stats", "repartition, then one Arrow pass: encode → decode → stats"),
     ("mann_kendall_trend", "per-user bounded pair join + exact tie terms"),
     ("top_p_nucleus_filter", "vocab-partitioned rank/cumsum, integer cut"),
     ("source_token_kl_divergence", "integer micro-log accumulation via DECIMAL"),
     ("ngram_coverage_curve", "model-sized vocab window + threshold explode"),
     ("customer_revenue_pareto", "ONE multi-value sharded prefix pass + single 3-threshold agg (r6)"),
-    ("multimodal_jpeg_block_stats", "repartitioned Arrow JPEG decode, no shuffle after (r6)"),
+    ("multimodal_jpeg_block_stats", "repartition, then one Arrow pass: JPEG encode → decode → stats"),
     ("knn_lsh_topk", "signature bucket join, ids-only shuffle, exact-assoc rescore (r6)"),
     ("theilsen_trend_per_user", "trailing-cap gate BEFORE the per-key pair join (r6)"),
     ("incremental_neardup_batch", "batch-Bloom prunes corpus map-side; sizes join AQE-sided (r8)"),
